@@ -48,5 +48,12 @@ def ordered_checkpointed(df: DataFrame, *cols: Column | str) -> DataFrame:
     Note: a checkpointed plan has no honest prepared-bench number (the
     handle would reuse the materialization), so bench.py times such
     queries in constructed mode — the LogicalRDD detector already
-    enforces that."""
+    enforces that.
+
+    Fault tolerance: ``localCheckpoint`` blocks live only in executor
+    storage and drop the lineage, so they are not reliable on a cluster. If
+    an executor holding them is lost (a crash, or dynamic allocation
+    releasing it), the query fails instead of recomputing the partitions.
+    The blocks also pin result-sized storage memory until the query ends.
+    In local mode the driver is the only executor, so neither applies."""
     return df.localCheckpoint(eager=False).orderBy(*cols)

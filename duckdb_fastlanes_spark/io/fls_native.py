@@ -1007,13 +1007,13 @@ def read_fls_native(
 
     # r11 (guide §4): typed VALUES LocalRelation for the file list —
     # createDataFrame(list) is a Python-RDD-backed relation whose every
-    # execution (plus the repartition) spins Python worker tasks just to
-    # emit the paths the decode tasks read
+    # execution spins Python worker tasks just to emit the paths the decode
+    # tasks read. Its LocalTableScan already splits the paths into
+    # min(len(files), leafNodeDefaultParallelism) partitions, so no shuffle
+    # is needed to spread the decode.
     from duckdb_fastlanes_spark.catalog import values_df
 
-    files_df = values_df(spark, [(f,) for f in files], "path string").repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
-    )
+    files_df = values_df(spark, [(f,) for f in files], "path string")
     return files_df.mapInArrow(decode, ddl)
 
 

@@ -411,6 +411,9 @@ def _lp_candidate_agg(batches):
         return
     tbl = pa.Table.from_batches(got)
     out = tbl.group_by("pk").aggregate([("w_u", "sum"), ("aa_term", "sum")])
+    # select by name: the key's position in group_by output varies across
+    # pyarrow releases, and all three columns are int64
+    out = out.select(["pk", "w_u_sum", "aa_term_sum"])
     yield from out.rename_columns(["pk", "cn_u", "aa_u"]).to_batches()
 
 

@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the directory holding the ``duckdb_fastlanes_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "duckdb-fastlanes-spark",
@@ -27,10 +30,15 @@ def get_spark(
       zone-map pruning (src/reader/row_group_filter.cpp:75-199).
     - Session timezone pinned to UTC so timestamp semantics match the DuckDB
       oracle (DuckDB TIMESTAMP is naive/UTC-like).
+    - Local masters run Python workers through ``worker_daemon`` (PySpark's
+      daemon, minus every task re-reading the zip archives on ``sys.path``)
+      and put this package's parent directory on the workers'
+      ``PYTHONPATH``, so Python tasks import the package from any cwd.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         master = f"local[{cpus}]"
+    local = master.startswith("local")
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
 
@@ -66,11 +74,8 @@ def get_spark(
         # through dirty-page writeback, and lz4 at ~16 GB/s across 32 cores
         # is never the bottleneck while the disk at ~1 GB/s is. A cluster
         # master keeps every default.
-        .config("spark.locality.wait", "0" if master.startswith("local") else "3s")
-        .config(
-            "spark.broadcast.compress",
-            "false" if master.startswith("local") else "true",
-        )
+        .config("spark.locality.wait", "0" if local else "3s")
+        .config("spark.broadcast.compress", "false" if local else "true")
         # iterative operators localCheckpoint intermediate frames; the JVM
         # blocks only release after a driver GC cycle notifies the
         # ContextCleaner, and the default 30min periodic GC lets residue
@@ -86,6 +91,13 @@ def get_spark(
         # workloads are unaffected (one job at a time schedules the same).
         .config("spark.scheduler.mode", "FAIR")
     )
+    if local:
+        # the workers share this host's interpreter, so they can import the
+        # package from where the driver did; Spark merges this entry with
+        # its own and with the environment's PYTHONPATH
+        builder = builder.config(
+            "spark.python.daemon.module", "duckdb_fastlanes_spark.worker_daemon"
+        ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -349,6 +349,19 @@ def test_spark_roundtrip_documents(spark, tmp_path, parts):
     assert d.exceptAll(rt).count() == 0
 
 
+def test_spark_read_plans_no_exchange(spark, tmp_path):
+    """The file list's LocalTableScan already spreads the paths over the
+    decode tasks; a shuffle below the MapInArrow would only add a stage."""
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    out = str(tmp_path / "li")
+    write_fls_native(li.repartition(6), out)
+    rt = read_fls_native(spark, out)
+    plan = rt._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "Exchange" not in plan
+    assert rt.rdd.getNumPartitions() == min(6, spark.sparkContext.defaultParallelism)
+    assert rt.exceptAll(li).count() == 0 and li.exceptAll(rt).count() == 0
+
+
 def test_spark_partition_invariance(spark, tmp_path):
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     outs = []
