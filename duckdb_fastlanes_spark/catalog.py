@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from duckdb_fastlanes_spark.sizing import catalog_stats
+
 TABLES = (
     "region",
     "nation",
@@ -73,8 +75,8 @@ _BUCKET_N = 32
 #: staged-layout parquet codec. lz4, not zstd (r10 A/B at the 1000x cell):
 #: scans dominate constructed-mode cost, and Spark's zstd decode of the
 #: 60 M-row 5-column lineitem pass ran 0.53 s warm / 2.6 s cold vs lz4's
-#: 0.44 s / 0.74 s (tools/q9_ab2.py session; snappy between). Disk cost is
-#: +22% on a local /tmp layout nobody ships. A cluster ingest would weigh
+#: 0.44 s / 0.74 s (ROUNDLOG.md r10, tpch_q9@1000× A/B; snappy between).
+#: Disk cost is +22% on a local /tmp layout nobody ships. A cluster ingest would weigh
 #: network/storage economics differently — the constant is the knob.
 _LAYOUT_CODEC = "lz4"
 #: (dir_key, name) → (table_name, staged_dir, key); staging is on-disk and
@@ -187,6 +189,7 @@ def optimize_layout(spark: SparkSession, sf_dir: str, cache_root: str = "/tmp/df
     import os
 
     key = sf_dir.rstrip("/")
+    stats = catalog_stats(key)
     out_root = os.path.join(cache_root, os.path.basename(key))
     os.makedirs(out_root, exist_ok=True)
     for name in TABLES:
@@ -207,11 +210,7 @@ def optimize_layout(spark: SparkSession, sf_dir: str, cache_root: str = "/tmp/df
         ):
             if spark.read.parquet(dst).count() == src_df.count():
                 continue  # staged copy is current
-        src_bytes = 0
-        try:
-            src_bytes = os.path.getsize(src)
-        except OSError:
-            pass
+        src_bytes = stats.tables[name].disk_bytes
         n_files = min(
             _MAX_FILES, max(_MIN_FILES.get(name, 0), src_bytes // _SPLIT_BYTES)
         )
@@ -236,9 +235,7 @@ def optimize_layout(spark: SparkSession, sf_dir: str, cache_root: str = "/tmp/df
     # above the input gauge, additionally stage the fact tables BUCKETED on
     # their join keys (pay the shuffle once at ingest; every orderkey join
     # and distinct downstream runs exchange-free — see _BUCKET_KEYS note)
-    from duckdb_fastlanes_spark.session import SMALL_INPUT_BYTES, input_gauge_bytes
-
-    if input_gauge_bytes(key) >= SMALL_INPUT_BYTES:
+    if stats.large:
         _stage_bucketed(spark, key, out_root)
     return out_root
 

@@ -57,16 +57,11 @@ def cc_edge_width(spark, sf_dir: str) -> int:
     ``documents`` bytes (floor = the measured-best tiny-input width, cap
     4096) keeps partitions meaningful at every scale: sf0.1 stays at the
     4-partition width the tiny-input sweep chose, the sf10 cell gets ~15,
-    and a 100 TB corpus hits the cap instead of 4. Unreadable footers
-    degrade to the whole-catalog gauge."""
-    from duckdb_fastlanes_spark.session import (
-        input_gauge_bytes,
-        parquet_table_bytes,
-    )
+    and a 100 TB corpus hits the cap instead of 4."""
+    from duckdb_fastlanes_spark.sizing import width
 
-    docs = parquet_table_bytes(sf_dir, "documents") or input_gauge_bytes(sf_dir)
     floor = max(spark.sparkContext.defaultParallelism // 8, 4)
-    return max(floor, min(4096, docs // (16 * 1024**2)))
+    return width(sf_dir, "documents", 16, floor)
 
 
 def min_label_propagation(

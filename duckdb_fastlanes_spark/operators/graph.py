@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_fastlanes_spark import sizing
 from duckdb_fastlanes_spark.catalog import table
 from duckdb_fastlanes_spark.registry import register
 
@@ -357,11 +358,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         # beyond the tier the candidate-array payload is ~avg-degree× the
         # row count; widen the one unavoidable exchange so partitions hold
         # ~100-300 MB instead of spilling
-        import os
-
-        probe = probe.repartition(
-            6 * int(os.environ.get("SPARK_GRAFT_CPUS", "32")), "v"
-        )
+        probe = probe.repartition(6 * spark.sparkContext.defaultParallelism, "v")
         closing = probe.join(adj_v.hint("shuffle_hash"), "v")
     tri = (
         closing.select(
@@ -520,9 +517,8 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded by the tiny input), above it the gauge picks a shuffled hash
     # join — at 100 TB the node table is itself fact-sized and a broadcast
     # would blow the driver/exchange memory (r6 verdict hygiene item)
-    from duckdb_fastlanes_spark.session import SMALL_INPUT_BYTES, input_gauge_bytes
-
-    _big = input_gauge_bytes(sf_dir) >= SMALL_INPUT_BYTES
+    stats = sizing.catalog_stats(sf_dir)
+    _big = stats.large
 
     def _dim(df):
         return df.hint("shuffle_hash") if _big else F.broadcast(df)
@@ -569,20 +565,8 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineitem alone, and a catalog dominated by other tables (wide
     # documents/events text) must not over-partition this query into many
     # tiny aggregate tasks. The 18 MB divisor reproduces the r11-calibrated
-    # width at the sf10 cell (330 → 322 partitions, ~6 M groups/task);
-    # unreadable footers (gauge 0) degrade to the whole-catalog gauge.
-    from duckdb_fastlanes_spark.session import parquet_table_bytes
-
-    _li_bytes = parquet_table_bytes(sf_dir, "lineitem")
-    width = max(
-        spark.sparkContext.defaultParallelism,
-        min(
-            4096,
-            _li_bytes // (18 * 1024**2)
-            if _li_bytes
-            else input_gauge_bytes(sf_dir) // (24 * 1024**2),
-        ),
-    )
+    # width at the sf10 cell (330 → 322 partitions, ~6 M groups/task).
+    width = sizing.width(sf_dir, "lineitem", 18, spark.sparkContext.defaultParallelism)
     # per-dst adjacency arrays (≤ ~CAP entries by the sampling bound): the
     # sorted array's post-position suffix is exactly the s1 < s2 partner
     # set, so pair generation is row-local codegen over ONE shuffle of the
@@ -628,7 +612,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # domain from parquet footer statistics (driver-only, no job): beyond
     # 2³¹ the unpacked shape stands — results identical either way.
     #
-    # r12 (VERDICT item 1, guide §2.3/§4.2, tools/lp_agg_ab3/4/5.py): the
+    # r12 (VERDICT item 1, guide §2.3/§4.2, OPTIMIZATION_r12.md): the
     # packed candidate aggregate planned TWO back-to-back HashAggregates
     # (partial+final in one stage — the partial shrank the stream only ~6%,
     # measured 77% of executor CPU building two ~20.7 M-group maps). A/B'd
@@ -645,9 +629,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical top-25; sf0.1 min-of-6 flat (3.31 → 3.27 s). The arrow
     # boundary ships only (pk, w_u, aa_term) — 24 B/row — and per-task
     # group counts are bounded by the data-scaled exchange width above.
-    from duckdb_fastlanes_spark.session import parquet_column_range
-
-    _rng = parquet_column_range(sf_dir, "lineitem", "l_partkey")
+    _rng = stats.column_range("lineitem", "l_partkey")
     _pack = _rng is not None and 0 <= _rng[0] and _rng[1] < (1 << 31)
     est = F.col("cn_u") / F.lit(1000000000.0)
     if _pack:
@@ -663,6 +645,12 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(_dim(pairs.select(pk)), ["pk"], "left_anti")
             .select("pk", w_u, aa_term)
         )
+        # _lp_candidate_agg is a COMPLETE aggregate per task, so every pk
+        # must reach exactly one task: the only exchange below it is the
+        # repartition(width, "pk") above (the anti-join keeps that
+        # partitioning), and AQE must never coalesce or skew-split it
+        # (REPARTITION_BY_NUM is ineligible for both). Pinned by
+        # test_link_prediction_single_candidate_aggregate_build.
         cand = stream.mapInArrow(
             _lp_candidate_agg, "pk bigint, cn_u bigint, aa_u bigint"
         )

@@ -31,31 +31,11 @@ from pyspark.sql import functions as F
 
 from duckdb_fastlanes_spark.catalog import table
 from duckdb_fastlanes_spark.registry import ROUND_SCALE, register
+from duckdb_fastlanes_spark.sizing import pin
 
 
 def _ts(s: str) -> F.Column:
     return F.lit(f"{s} 00:00:00").cast("timestamp")
-
-
-def _pin_shuffle_hash(df: DataFrame, sf_dir: str) -> DataFrame:
-    """Shuffle-hash hint for a FACT-SIZED join side, applied above the
-    small-input threshold only (same gauge and rationale as
-    dedup._pin_merge). Below the threshold the static planner's broadcast
-    is the fast plan and the hint would add two needless exchanges. Above
-    it, the column-pruned size ESTIMATE of a fact table (orders: two of
-    nine columns) can slip under the broadcast threshold while the actual
-    hash relation is 10-20× larger — measured at the 1000× SCALE cell,
-    broadcasting the 15 M-row orders build ran tpch_q9 at 11.3 s
-    (single-threaded driver build + GC pressure) vs 2.8 s with the build
-    distributed across shuffle partitions. Sort-merge is wrong here too:
-    SHJ skips sorting the 60 M-row probe. At cluster scale the
-    per-partition build is bounded by AQE partition sizing, exactly like
-    every other engine's partitioned hash join."""
-    from duckdb_fastlanes_spark.session import SMALL_INPUT_BYTES, input_gauge_bytes
-
-    if input_gauge_bytes(sf_dir) >= SMALL_INPUT_BYTES:
-        return df.hint("shuffle_hash")
-    return df
 
 
 #: micro-unit exact-integer money sum (see operators/tpch.py: a raw double
@@ -351,7 +331,7 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     so profit = discounted revenue (the supplycost term is dropped); the join
     and group-by shape is Q9's. The part-filtered lineitem side of the
     orders join is pinned to a distributed hash build above the input gauge
-    (_pin_shuffle_hash — the %red% filter keeps ~5% of lineitem, the
+    (``sizing.pin`` — the %red% filter keeps ~5% of lineitem, the
     smallest side of that join, so it is the right build at every scale);
     part/supplier stay with AQE, which broadcast-converts them from their
     post-filter sizes."""
@@ -371,7 +351,9 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
         # would re-shuffle the filtered stream it just avoided sorting)
         lps = lps.hint("merge")
     else:
-        lps = _pin_shuffle_hash(lps, sf_dir)
+        # shuffled hash, not sort-merge: SHJ skips sorting the 60 M-row
+        # probe, and AQE bounds each partition's build at cluster scale
+        lps = pin(lps, sf_dir, "shuffle_hash")
     return (
         lps.join(o, li.l_orderkey == o.o_orderkey)
         .join(n, s.s_nationkey == n.n_nationkey)

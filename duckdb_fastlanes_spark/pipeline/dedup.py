@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from duckdb_fastlanes_spark.catalog import table
 from duckdb_fastlanes_spark.registry import register
+from duckdb_fastlanes_spark.sizing import catalog_stats
 
 #: MinHash configuration: 8 hashes in 4 bands of 2 → candidates share ≥1 band
 N_MINHASH = 8
@@ -102,28 +103,6 @@ def _shingle_sets(d: DataFrame) -> DataFrame:
         .agg(F.collect_set("shingle").alias("shingles"))
         .select("doc_id", "shingles", F.size("shingles").alias("n_sh"))
     )
-
-
-def _pin_merge(df: DataFrame, sf_dir: str) -> DataFrame:
-    """Sort-merge hint for corpus-sized join sides, applied above the
-    small-input threshold only.
-
-    Above ``SMALL_INPUT_BYTES`` decoded the session runs the default path
-    (AQE on) and AQE's compressed-shuffle estimate flips corpus-sized
-    self-joins to broadcasts — measured at the 100× cell the broadcast
-    turned the ngram family 6 s → 15-25 s and 3× worse at 1000×, and at
-    100 TB broadcasting a shingle/band/embedding stream is impossible
-    outright. Below the threshold AQE is off, the static planner sizes
-    these joins from raw file bytes (correctly small), and the broadcast
-    IS the fast plan — so the pin activates exactly with AQE, on the same
-    gauge (`session.input_gauge_bytes`, the identical footer-or-filesize
-    fallback ``tune_for_input`` reads — unreadable footers therefore flip
-    BOTH the AQE gate and this pin together, never one without the other)."""
-    from duckdb_fastlanes_spark.session import SMALL_INPUT_BYTES, input_gauge_bytes
-
-    if input_gauge_bytes(sf_dir) >= SMALL_INPUT_BYTES:
-        return df.hint("merge")
-    return df
 
 
 #: Spark-SQL twin of ``_shingle_rows(distinct=False)`` — CTE text over the
@@ -386,12 +365,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands of {BAND_WIDTH} → band-key equi-join for candidates → exact Jaccard
     verify on candidates only. The equi-join on band keys is the scale path:
     no n² compare, and band buckets shuffle-partition evenly."""
-    import os
-
     from pyspark import StorageLevel
 
     from duckdb_fastlanes_spark.catalog import sql_q
-    from duckdb_fastlanes_spark.session import SMALL_INPUT_BYTES, input_gauge_bytes
 
     # One shared per-doc aggregate feeds BOTH the signature and the verify
     # sets: min-wise hashing is duplicate-insensitive and collect_set dedupes,
@@ -430,23 +406,16 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands_sql = ", ".join(_band_expr(b) for b in range(n_bands))
     # both sides of the band self-join are the full signature stream
     # (docs × n_bands rows) — corpus-sized; without the pin AQE flips it to
-    # a broadcast at mid scale (+36% at the 1000× cell). Same gauge as
-    # _pin_merge, expressed as a MERGE hint in the single-parse body.
-    merge = (
-        "/*+ MERGE(b) */ "
-        if input_gauge_bytes(sf_dir) >= SMALL_INPUT_BYTES
-        else ""
-    )
+    # a broadcast at mid scale (+36% at the 1000× cell). The gate of
+    # ``sizing.pin``, expressed as a MERGE hint in the single-parse body.
+    stats = catalog_stats(sf_dir)
+    merge = "/*+ MERGE(b) */ " if stats.large else ""
     # Join the shingle sets back onto the surviving pairs. Small corpora
-    # broadcast the set table (no shuffle); above the threshold fall back to
-    # a shuffle join that AQE plans from the persisted size.
-    try:
-        small = (
-            os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
-            < 256 * 1024 * 1024
-        )
-    except OSError:
-        small = False
+    # broadcast the set table (no shuffle); above 256 MiB of on-disk
+    # documents fall back to a shuffle join that AQE plans from the
+    # persisted size.
+    docs = stats.tables.get("documents")
+    small = docs is not None and docs.disk_bytes < 256 * 1024 * 1024
     bc = "/*+ BROADCAST(sa), BROADCAST(sb) */ " if small else ""
     jac_sql = (
         "cast(size(array_intersect(sa.shingles, sb.shingles)) AS DOUBLE)"
@@ -576,17 +545,12 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF cells at scale) — the blocked-join pattern that avoids the n² cross
     join. Dot products stay JVM-side via zip_with + aggregate."""
     from duckdb_fastlanes_spark.catalog import sql_q
-    from duckdb_fastlanes_spark.session import SMALL_INPUT_BYTES, input_gauge_bytes
 
     # the label-blocked pairwise join self-joins the full embedding
-    # store — corpus-sized both sides, pinned above the threshold (same
-    # gauge as _pin_merge, inline MERGE hint). Norms are precomputed once
-    # per vector (n rows), so the join evaluates one dot per pair.
-    merge = (
-        "/*+ MERGE(b) */ "
-        if input_gauge_bytes(sf_dir) >= SMALL_INPUT_BYTES
-        else ""
-    )
+    # store — corpus-sized both sides, pinned above the threshold (the
+    # gate of ``sizing.pin``, inline MERGE hint). Norms are precomputed
+    # once per vector (n rows), so the join evaluates one dot per pair.
+    merge = "/*+ MERGE(b) */ " if catalog_stats(sf_dir).large else ""
     return sql_q(
         spark,
         sf_dir,

@@ -343,8 +343,8 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r12 (guide §2.4): the global sort's range partitioner SAMPLES its
         # child, and a no-shuffle python pipeline has no reusable stage —
         # the whole write+decode ran TWICE per query (measured at the 1000×
-        # cell: tools/mm_parse_decomp.py — quantized pipeline 5.4 s, + the
-        # bare ORDER BY 8.4 s). The lazy checkpoint materializes the
+        # cell, OPTIMIZATION_r12.md multimodal section: quantized pipeline
+        # 5.4 s, + the bare ORDER BY 8.4 s). The lazy checkpoint materializes the
         # feature rows once; the sampler and the sort both read the blocks.
         .localCheckpoint(eager=False)
         .orderBy("doc_id")
@@ -594,7 +594,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("sum_luma")
         # lazy checkpoint before the global sort — the range sampler would
         # otherwise re-run the whole container write+walk+decode pipeline
-        # (see multimodal_features, tools/mm_parse_decomp.py)
+        # (see multimodal_features, OPTIMIZATION_r12.md)
         .localCheckpoint(eager=False)
         .orderBy("doc_id", "frame_idx")
     )
@@ -781,7 +781,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("sum_sq")
         # lazy checkpoint before the global sort — the range sampler would
         # otherwise re-run the whole write+parse pipeline (see
-        # multimodal_features, tools/mm_parse_decomp.py)
+        # multimodal_features, OPTIMIZATION_r12.md)
         .localCheckpoint(eager=False)
         .orderBy("doc_id")
     )

@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from duckdb_fastlanes_spark.sizing import catalog_stats
+
 #: the directory holding the ``duckdb_fastlanes_spark`` package
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -23,6 +25,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
+    - ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, or to every core
+      this process may run on when the variable is unset; the default
+      shuffle width is the same count.
     - AQE on (runtime re-planning, skew-join splitting, partition coalescing) —
       the Spark counterpart of the reference's runtime adaptivity
       (adaptive filter ordering, src/reader/fls_reader.cpp:357-380).
@@ -35,12 +40,12 @@ def get_spark(
       and put this package's parent directory on the workers'
       ``PYTHONPATH``, so Python tasks import the package from any cwd.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     if master is None:
         master = f"local[{cpus}]"
     local = master.startswith("local")
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
+        shuffle_partitions = int(cpus)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -108,186 +113,6 @@ def sf_dir(default: str = "/root/testdata/sf0.1") -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", default)
 
 
-#: inputs below this total DECODED size take the small-input fast path.
-#: Measured at the SCALE cells (24g driver, local[32]): at ~800 MB decoded
-#: the default path already wins decisively (count_distinct 7.3→1.5 s,
-#: triangle count 20→15 s, ngram dedup 18→15 s vs the fast path), so the
-#: gate sits well below it; at 22 MB (sf0.1) the fast path still wins on
-#: scheduling overhead. Between those the two paths are within noise.
-SMALL_INPUT_BYTES = 512 * 1024**2
-
-
-def _uncompressed_bytes(data_dir: str) -> int:
-    """Decoded size of the catalog's parquet files from their footers
-    (sum of row-group ``total_byte_size``); 0 when unreadable."""
-    try:
-        import pyarrow.parquet as pq
-
-        total = 0
-        for f in os.listdir(data_dir):
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(data_dir, f)).metadata
-            total += sum(
-                md.row_group(i).total_byte_size for i in range(md.num_row_groups)
-            )
-        return total
-    except Exception:
-        return 0
-
-
-#: gauge memo: data_dir → (cheap stat fingerprint, gauge bytes). The gauge
-#: is consulted on EVERY query build (_pin_shuffle_hash, dedup._pin_merge,
-#: optimize_layout), and re-reading every parquet footer cost ~10-30 ms per
-#: build — ~5 s of pure overhead across a 240-query sweep. The fingerprint
-#: is a stat()-only pass (names, sizes, mtimes), so a regenerated corpus
-#: still re-gauges while an unchanged one answers from the memo.
-_GAUGE_MEMO: dict[str, tuple[tuple, int]] = {}
-
-
-def _dir_stat_fingerprint(data_dir: str) -> tuple:
-    try:
-        entries = []
-        for f in sorted(os.listdir(data_dir)):
-            p = os.path.join(data_dir, f)
-            if os.path.isfile(p):
-                st = os.stat(p)
-                entries.append((f, st.st_size, st.st_mtime_ns, st.st_ino))
-        return tuple(entries)
-    except OSError:
-        return ()
-
-
-def input_gauge_bytes(data_dir: str) -> int:
-    """THE input-size gauge: decoded parquet bytes from footers, falling back
-    to on-disk bytes when footers are unreadable. Shared by ``tune_for_input``
-    (the AQE on/off gate) and operator-level AQE pins (``dedup._pin_merge``)
-    so both flip on exactly the same number — a corpus with unreadable
-    footers must not end up on the AQE-on default path without the merge
-    pin that guards it against the broadcast pathology. Memoized on a
-    stat-only directory fingerprint (footer reads only when the directory
-    contents actually changed)."""
-    fp = _dir_stat_fingerprint(data_dir)
-    hit = _GAUGE_MEMO.get(data_dir)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    try:
-        total = sum(
-            os.path.getsize(os.path.join(data_dir, f))
-            for f in os.listdir(data_dir)
-            if os.path.isfile(os.path.join(data_dir, f))
-        )
-    except OSError:
-        total = 0
-    gauge = _uncompressed_bytes(data_dir) or total
-    _GAUGE_MEMO[data_dir] = (fp, gauge)
-    return gauge
-
-
-#: (data_dir, table, column) → (file stat fingerprint, (min, max) | None)
-_COL_RANGE_MEMO: dict[tuple[str, str, str], tuple[tuple, tuple | None]] = {}
-
-#: (data_dir, table) → (file stat fingerprint, decoded bytes)
-_TABLE_BYTES_MEMO: dict[tuple[str, str], tuple[tuple, int]] = {}
-
-
-def parquet_table_bytes(data_dir: str, table: str) -> int:
-    """Decoded bytes of ONE table (``<table>.parquet`` row-group
-    total_byte_size sum) — the per-table sibling of ``input_gauge_bytes``.
-    Exchange widths that scale with a single table's volume (e.g. the
-    link-prediction wedge width, driven by lineitem alone) gauge this
-    instead of the whole-catalog total, so a catalog dominated by OTHER
-    tables (wide text columns in documents/events) does not over-partition
-    the query into many tiny tasks (r11 ADVICE item). Returns 0 when the
-    file or its footer is unreadable — callers treat 0 as "unknown, use
-    the floor". Memoized on the file's stat fingerprint."""
-    data_dir = data_dir.rstrip("/")
-    src = os.path.join(data_dir, f"{table}.parquet")
-    try:
-        st = os.stat(src)
-        fp = (st.st_size, st.st_mtime_ns, st.st_ino)
-    except OSError:
-        return 0
-    key = (data_dir, table)
-    hit = _TABLE_BYTES_MEMO.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    total = 0
-    try:
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(src).metadata
-        total = sum(
-            md.row_group(i).total_byte_size for i in range(md.num_row_groups)
-        )
-    except Exception:
-        total = 0
-    _TABLE_BYTES_MEMO[key] = (fp, total)
-    return total
-
-
-def parquet_column_range(
-    data_dir: str, table: str, column: str
-) -> tuple[int, int] | None:
-    """(min, max) of ``column`` across ``<table>.parquet``'s row-group footer
-    statistics — driver-only metadata, no Spark job (the zone-map machinery
-    operators/scan.py already relies on). Returns None when the file or its
-    stats are unavailable, so callers degrade to their stat-free path.
-    Memoized on the file's stat fingerprint (size/mtime/inode), the
-    input_gauge_bytes pattern. Used to gate key-packing rewrites (e.g.
-    graph_link_prediction packs a pair of keys into one BIGINT only while
-    the key domain provably fits 32 bits)."""
-    data_dir = data_dir.rstrip("/")
-    src = os.path.join(data_dir, f"{table}.parquet")
-    try:
-        st = os.stat(src)
-        fp = (st.st_size, st.st_mtime_ns, st.st_ino)
-    except OSError:
-        return None
-    # key normalized on the rstripped dir so 'dir' and 'dir/' share one memo
-    # entry (r11 ADVICE: the raw string keyed duplicate entries — extra
-    # footer reads, no correctness impact)
-    key = (data_dir, table, column)
-    hit = _COL_RANGE_MEMO.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    rng: tuple | None = None
-    try:
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(src).metadata
-        lo = hi = None
-        for i in range(md.num_row_groups):
-            rg = md.row_group(i)
-            for j in range(rg.num_columns):
-                c = rg.column(j)
-                if c.path_in_schema != column:
-                    continue
-                s = c.statistics
-                if s is None or not s.has_min_max:
-                    raise ValueError("missing stats")
-                lo = s.min if lo is None else min(lo, s.min)
-                hi = s.max if hi is None else max(hi, s.max)
-        if lo is not None:
-            rng = (lo, hi)
-    except Exception:
-        # conservative: ANY stats-less row group disables the whole range
-        # (a chunk written without min/max could hide out-of-range keys).
-        # Observable on purpose (r11 ADVICE): a silently-disabled packing
-        # fast path is otherwise invisible.
-        rng = None
-        import logging
-
-        logging.getLogger(__name__).debug(
-            "parquet_column_range: footer stats unavailable for %s.%s — "
-            "range-gated fast paths fall back to the unpacked shape",
-            table,
-            column,
-        )
-    _COL_RANGE_MEMO[key] = (fp, rng)
-    return rng
-
-
 def tune_for_input(spark: SparkSession, data_dir: str) -> None:
     """Adapt session conf to the catalog's input size (runtime-settable confs
     only; call any time, cheap enough to call per run).
@@ -295,7 +120,7 @@ def tune_for_input(spark: SparkSession, data_dir: str) -> None:
     Interactive engines (the reference's DuckDB host included) pay near-zero
     planning overhead on small inputs; Spark's defaults assume cluster-scale
     data where runtime re-planning and wide shuffles pay for themselves. On
-    small inputs they are pure overhead, so below SMALL_INPUT_BYTES:
+    small inputs they are pure overhead, so below ``sizing.SMALL_INPUT_BYTES``:
 
     - AQE off: per-stage runtime re-optimization cannot beat its own stage-
       barrier latency when every stage is milliseconds (measured ~20% of
@@ -313,26 +138,20 @@ def tune_for_input(spark: SparkSession, data_dir: str) -> None:
 
     Above the threshold every default stands (AQE, skew-join splitting, wide
     shuffles) — the 100 TB path is the default path, the fast path is the
-    explicitly-gated exception.
+    explicitly-gated exception. The gate is ``sizing.CatalogStats.large``:
+    it reflects the engine-visible DECODED size, not the on-disk ZSTD bytes
+    — text-heavy catalogs decode 4-10× bigger, and classifying a ~1.5 GB-
+    decoded corpus as "small" turns AQE off exactly where skew splitting and
+    partition coalescing start paying (measured at the 1000× SCALE cell:
+    ngram dedup 107 s fast-path vs 88 s default path). "cores" is the
+    session's ``defaultParallelism``.
     """
-    try:
-        total = sum(
-            os.path.getsize(os.path.join(data_dir, f))
-            for f in os.listdir(data_dir)
-            if os.path.isfile(os.path.join(data_dir, f))
-        )
-    except OSError:
+    if not os.path.isdir(data_dir):
         return
-    # The gate must reflect the engine-visible data size, not the on-disk
-    # ZSTD bytes: text-heavy catalogs decode 4-10× bigger, and classifying a
-    # ~1.5 GB-decoded corpus as "small" turns AQE off exactly where skew
-    # splitting and partition coalescing start paying (measured at the
-    # 1000× SCALE cell: ngram dedup 107 s fast-path vs 88 s default path).
-    # Parquet footers carry uncompressed sizes — a driver-side metadata read.
-    uncompressed = input_gauge_bytes(data_dir)
-    if uncompressed < SMALL_INPUT_BYTES:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    stats = catalog_stats(data_dir)
+    if not stats.large:
+        cpus = spark.sparkContext.defaultParallelism
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-        parts = min(cpus, max(cpus // 8, total // (8 * 1024**2), 2))
+        parts = min(cpus, max(cpus // 8, stats.disk_bytes // (8 * 1024**2), 2))
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))

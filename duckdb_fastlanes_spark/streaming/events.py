@@ -45,12 +45,9 @@ def staged_input(
     import re
     import tempfile
 
-    stat = []
-    for f in sorted(os.listdir(sf_dir)):
-        p = os.path.join(sf_dir, f)
-        if os.path.isfile(p):
-            st = os.stat(p)
-            stat.append((f, st.st_size, st.st_mtime_ns, st.st_ino))
+    from duckdb_fastlanes_spark.sizing import fingerprint
+
+    stat = fingerprint(sf_dir)
     # expression ids (#123) change on every DataFrame construction; strip
     # them so the SAME derivation memoizes across calls while any real
     # change (literal, column, operator) still flips the key

@@ -1,10 +1,13 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+#: the checkout these tests belong to, whatever directory it was copied to
+REPO_ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO_ROOT)
 
 from duckdb_fastlanes_spark import get_spark
 
@@ -31,3 +34,21 @@ def duck():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
     yield con
+
+
+@pytest.fixture
+def restore_size_conf(spark):
+    """Put back the session confs ``tune_for_input`` sets, so a test that
+    calls it leaves the shared session as it found it."""
+    keys = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.constraintPropagation.enabled",
+        "spark.sql.shuffle.partitions",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    yield
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)

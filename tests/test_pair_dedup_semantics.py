@@ -13,7 +13,7 @@ import re
 
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import REPO_ROOT, SF_DIR
 
 CAP = 32
 JT = 0.5
@@ -183,13 +183,13 @@ def test_pin_shuffle_hash_flips_join_strategy(spark, monkeypatch):
     hash build (ShuffledHashJoin), never a broadcast of the fact side;
     below it the hint must be absent so the static planner's broadcast
     stands."""
-    import duckdb_fastlanes_spark.session as session
+    import duckdb_fastlanes_spark.sizing as sizing
     from duckdb_fastlanes_spark.operators.tpch_suite import tpch_q9
 
     plan_small = tpch_q9(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin" not in plan_small
 
-    monkeypatch.setattr(session, "SMALL_INPUT_BYTES", 0)
+    monkeypatch.setattr(sizing, "SMALL_INPUT_BYTES", 0)
     plan_big = tpch_q9(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin" in plan_big
 
@@ -208,7 +208,7 @@ def test_cluster_cc_first_call_in_fresh_session_covers_all_endpoints():
     import sys
 
     code = """
-import sys; sys.path.insert(0, "/root/repo")
+import sys; sys.path.insert(0, "%s")
 from duckdb_fastlanes_spark import get_spark
 from duckdb_fastlanes_spark.pipeline.dedup import dedup_cluster_cc, dedup_minhash_lsh
 spark = get_spark("cc-first-call")
@@ -219,7 +219,7 @@ pairs = dedup_minhash_lsh(spark, sf).collect()
 endpoints = {r.doc_a for r in pairs} | {r.doc_b for r in pairs}
 assert n_cc == len(endpoints), f"CC rows {n_cc} != endpoints {len(endpoints)}"
 print("OK", n_cc)
-""" % SF_DIR
+""" % (REPO_ROOT, SF_DIR)
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, timeout=300
     )

@@ -370,12 +370,10 @@ def test_link_prediction_degree_join_degrades_to_hash_join_above_gauge(
     """r7 hygiene: the node-sized degree table broadcasts only BELOW the
     input gauge. Above it (100 TB: the node table is fact-sized) the gauge
     must pick a shuffled hash join — no unbounded-by-node-count broadcast."""
-    from duckdb_fastlanes_spark import session
+    from duckdb_fastlanes_spark import sizing
     from duckdb_fastlanes_spark.registry import queries
 
-    monkeypatch.setattr(
-        session, "input_gauge_bytes", lambda *_a, **_k: session.SMALL_INPUT_BYTES * 2
-    )
+    monkeypatch.setattr(sizing, "SMALL_INPUT_BYTES", 0)
     df = queries()["graph_link_prediction"](spark, SF_DIR)
     plan = explain_str(df, "simple")
     assert "ShuffledHashJoin" in plan
@@ -456,9 +454,9 @@ def test_link_prediction_packs_pair_key_through_aggregate(spark):
     is gated on the key domain from parquet footer statistics; at the test
     scale the gate is always open, so the plan must show the packed shape."""
     from duckdb_fastlanes_spark.registry import queries
-    from duckdb_fastlanes_spark.session import parquet_column_range
+    from duckdb_fastlanes_spark.sizing import catalog_stats
 
-    rng = parquet_column_range(SF_DIR, "lineitem", "l_partkey")
+    rng = catalog_stats(SF_DIR).column_range("lineitem", "l_partkey")
     assert rng is not None and 0 <= rng[0] and rng[1] < (1 << 31)
     df = queries()["graph_link_prediction"](spark, SF_DIR)
     plan = explain_str(df, "simple")
@@ -469,13 +467,50 @@ def test_link_prediction_packs_pair_key_through_aggregate(spark):
     assert re.search(r"TakeOrderedAndProject.*pk#\d+L ASC", plan), plan
 
 
-def test_link_prediction_single_candidate_aggregate_build(spark):
+def _plan_children(node):
+    # a query stage hides its exchange behind plan(), not children()
+    if node.nodeName().endswith("QueryStage"):
+        return [node.plan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _find_node(node, name):
+    if node.nodeName() == name:
+        return node
+    for kid in _plan_children(node):
+        hit = _find_node(kid, name)
+        if hit is not None:
+            return hit
+    return None
+
+
+def _nearest_shuffles(node, shuffles, reads):
+    """Shuffle exchanges reachable from ``node`` without crossing another
+    one (broadcast sides excluded), and the AQE reads met on the way."""
+    for kid in _plan_children(node):
+        name = kid.nodeName()
+        if name == "AQEShuffleRead":
+            reads.append(kid.toString())
+        if name == "Exchange":
+            shuffles.append(kid.outputPartitioning().toString())
+        elif "Broadcast" not in name:
+            _nearest_shuffles(kid, shuffles, reads)
+
+
+def test_link_prediction_single_candidate_aggregate_build(spark, monkeypatch):
     """r12 (VERDICT item 1): the packed candidate aggregate must run as ONE
     complete pyarrow group_by inside mapInArrow — zero JVM HashAggregate
     builds between the pk exchange and the top-25 cut (the r11 shape built
     two ~20.7 M-group maps back-to-back, 77% of executor CPU) — and the
     pair anti-join must sit BELOW the aggregate (pre-agg filtering is
-    result-identical and removes the post-agg join/exchange)."""
+    result-identical and removes the post-agg join/exchange).
+
+    The complete aggregate is only correct while every pk reaches exactly
+    one task: in the executed (AQE final) plan, on both sides of the input
+    gauge, every shuffle below MapInArrow is hashpartitioning(pk, width)
+    and no AQEShuffleRead coalesces or skew-splits it."""
+    from duckdb_fastlanes_spark import sizing
     from duckdb_fastlanes_spark.registry import queries
 
     df = queries()["graph_link_prediction"](spark, SF_DIR)
@@ -493,6 +528,29 @@ def test_link_prediction_single_candidate_aggregate_build(spark):
     # anti-join is below (printed after) the arrow aggregate
     anti_pos = plan.find("LeftAnti")
     assert anti_pos > arrow_pos, plan
+
+    width = sizing.width(
+        SF_DIR, "lineitem", 18, spark.sparkContext.defaultParallelism
+    )
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        for threshold in (sizing.SMALL_INPUT_BYTES, 0):
+            monkeypatch.setattr(sizing, "SMALL_INPUT_BYTES", threshold)
+            df = queries()["graph_link_prediction"](spark, SF_DIR)
+            df.collect()
+            final = df._jdf.queryExecution().executedPlan().executedPlan()
+            shuffles, reads = [], []
+            _nearest_shuffles(_find_node(final, "MapInArrow"), shuffles, reads)
+            assert shuffles, final.toString()
+            for part in shuffles:
+                assert re.fullmatch(rf"hashpartitioning\(pk#\d+L, {width}\)", part), (
+                    threshold,
+                    final.toString(),
+                )
+            assert not reads, (threshold, reads)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
 def test_sort_resample_fix_checkpoints_before_global_sort(spark):

@@ -24,7 +24,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from duckdb_fastlanes_spark import registry
-from tests.conftest import SF_DIR
+from tests.conftest import REPO_ROOT, SF_DIR
 
 TABLES = (
     "region nation customer supplier part orders lineitem "
@@ -202,7 +202,7 @@ def test_kcore_and_rfm_first_call_fresh_interpreter():
     import sys
 
     code = """
-import sys; sys.path.insert(0, "/root/repo")
+import sys; sys.path.insert(0, "%s")
 import duckdb
 from duckdb_fastlanes_spark import get_spark, registry
 spark = get_spark("r10-fresh")
@@ -219,7 +219,7 @@ for name in ("graph_k_core", "customers_rfm_segments"):
         str(a) == str(b) for ra, rb in zip(got, exp) for a, b in zip(ra, rb)
     ), f"{name}: {got[:3]} vs {exp[:3]}"
 print("OK")
-""" % SF_DIR
+""" % (REPO_ROOT, SF_DIR)
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, timeout=600
     )

@@ -10,13 +10,14 @@ values (sorted by column name, rows sorted). Use while iterating:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from duckdb_fastlanes_spark import get_spark, registry
 from duckdb_fastlanes_spark.catalog import TABLES

@@ -15,6 +15,7 @@ casting identically on both engines, not by loosening this check.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
@@ -22,7 +23,7 @@ import traceback
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from duckdb_fastlanes_spark import get_spark, registry
 from duckdb_fastlanes_spark.catalog import TABLES

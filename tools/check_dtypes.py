@@ -12,12 +12,13 @@ exact value repr) differs.
 
 from __future__ import annotations
 
+import os
 import sys
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from duckdb_fastlanes_spark import get_spark, registry
 from duckdb_fastlanes_spark.catalog import TABLES

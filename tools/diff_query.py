@@ -12,12 +12,13 @@ Prints per-column dtype pairs and the first N mismatching cells at full repr.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from duckdb_fastlanes_spark import get_spark, registry
 from duckdb_fastlanes_spark.catalog import TABLES

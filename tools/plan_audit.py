@@ -16,9 +16,10 @@ Usage: python tools/plan_audit.py [out.md] [sf_dir]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from duckdb_fastlanes_spark import get_spark, registry  # noqa: E402
 from duckdb_fastlanes_spark.plans.checks import explain_str  # noqa: E402

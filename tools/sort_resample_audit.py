@@ -23,9 +23,10 @@ from __future__ import annotations
 
 import json
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HEAVY = re.compile(
     r"HashAggregate|SortAggregate|ObjectHashAggregate|Window|SortMergeJoin"
@@ -49,7 +50,7 @@ def main() -> int:
     from duckdb_fastlanes_spark.session import tune_for_input
 
     if top and not names:
-        sweep = json.load(open("/root/repo/SWEEP_DECOMP.json"))
+        sweep = json.load(open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SWEEP_DECOMP.json")))
         qs = sweep["queries"]
         names = [
             k

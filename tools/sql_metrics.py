@@ -9,11 +9,12 @@ Usage: python tools/sql_metrics.py [query] [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from duckdb_fastlanes_spark import get_spark, registry
 

@@ -34,7 +34,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from duckdb_fastlanes_spark import get_spark, registry
 from duckdb_fastlanes_spark.bench_support import drain_persists, reset_drains
