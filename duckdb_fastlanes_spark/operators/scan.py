@@ -450,28 +450,14 @@ def scan_hive_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_fastlanes_spark.io.fls import read_fls, write_fls
 
     ev = table(spark, sf_dir, "events")
-    # Cache key includes the source dir: each scale factor gets its own layout.
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(tempfile.gettempdir(), f"dfs_hive_events_{tag}")
-    marker = os.path.join(out, "_SUCCESS")
-
-    def _has_files() -> bool:
-        # short-circuit at the first data file (r8 ADVICE: the full os.walk
-        # ran on every invocation)
-        for _, _, fs in os.walk(out):
-            if any(f.endswith(".parquet") for f in fs):
-                return True
-        return False
 
     def _src_fingerprint() -> str:
-        # driver-side stat of the source files — distinguishes "this exact
-        # (possibly empty) corpus was already laid out" from "stale marker
-        # left by a different catalog sharing the basename" without
-        # touching executors (r9 ADVICE: a genuinely empty source must be
-        # written at most once per corpus version, not per call)
+        # driver-side stat of the source files: each version of each
+        # catalog's events gets its own layout dir, so neither a stale copy
+        # nor another catalog sharing the basename can serve
         import hashlib
 
-        src = os.path.join(sf_dir, "events.parquet")
+        src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
         if os.path.isdir(src):
             paths = sorted(
                 os.path.join(r, f) for r, _, fs in os.walk(src) for f in fs
@@ -484,20 +470,32 @@ def scan_hive_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             parts.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
         return hashlib.md5("|".join(parts).encode()).hexdigest()
 
-    fp = _src_fingerprint()
-    empty_sentinel = os.path.join(out, f"_EMPTY_{fp}")
-    # marker-without-files is a cache miss UNLESS the verified-empty
-    # sentinel matches this exact source version: a stale marker from a
-    # different catalog sharing the basename rewrites once, while a
-    # genuinely empty corpus is written at most once per version (no
-    # unbounded rewrite churn / bench-thread write races — r9 ADVICE)
-    if not (
-        os.path.exists(marker)
-        and (_has_files() or os.path.exists(empty_sentinel))
-    ):
-        write_fls(ev, out, partition_by=["event_type"])
-        if not _has_files():
-            open(empty_sentinel, "w").close()
+    out = os.path.join(tempfile.gettempdir(), f"dfs_hive_events_{_src_fingerprint()}")
+
+    def _has_files() -> bool:
+        # short-circuit at the first data file (r8 ADVICE: the full os.walk
+        # ran on every invocation)
+        for _, _, fs in os.walk(out):
+            if any(f.endswith(".parquet") for f in fs):
+                return True
+        return False
+
+    if not os.path.isdir(out):
+        # atomic publish (the z-order staging discipline): build in a tmp
+        # sibling private to this process and thread, rename it into place
+        # when complete. Concurrent first callers never share a directory;
+        # the loser of the rename discards its own copy. A genuinely empty
+        # corpus publishes a dir with no data files, written once per version.
+        import shutil
+        import threading
+
+        tmp = f"{out}.tmp-{os.getpid()}-{threading.get_ident()}"
+        shutil.rmtree(tmp, ignore_errors=True)
+        write_fls(ev, tmp, partition_by=["event_type"])
+        try:
+            os.rename(tmp, out)
+        except OSError:
+            shutil.rmtree(tmp, ignore_errors=True)  # concurrent winner serves
     # empty source: the partitioned write lands no data files and schema
     # inference on the empty layout fails — fall back to the source frame
     # (the pruning demonstration needs data to prune)

@@ -36,6 +36,20 @@ def duck():
     yield con
 
 
+def reset_layout(sf_dir: str) -> None:
+    """Undo ``catalog.optimize_layout`` for ``sf_dir``: unpersist its
+    in-memory pins, drop its cached scans and staged-copy redirect, and make
+    the next SQL query register its views again."""
+    from duckdb_fastlanes_spark import catalog
+
+    key = sf_dir.rstrip("/")
+    catalog._forget(key)
+    catalog._LAYOUT.pop(key, None)
+    for sid, d in list(catalog._VIEWS_CURRENT.items()):
+        if d == key:
+            del catalog._VIEWS_CURRENT[sid]
+
+
 @pytest.fixture
 def restore_size_conf(spark):
     """Put back the session confs ``tune_for_input`` sets, so a test that

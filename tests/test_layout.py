@@ -3,6 +3,7 @@ bucketed tables must join without an exchange."""
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
 
@@ -11,7 +12,7 @@ from pyspark.sql import functions as F
 from duckdb_fastlanes_spark.catalog import table
 from duckdb_fastlanes_spark.io.fls import read_fls, write_fls, write_fls_bucketed
 from duckdb_fastlanes_spark.plans.checks import explain_str
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, reset_layout
 
 
 def test_partitioned_write_prunes_directories(spark, tmp_path):
@@ -158,23 +159,131 @@ def test_zorder_tightens_both_dimensions(spark, tmp_path):
     assert avg_fraction(cout, 1, pk_span) > 0.9
 
 
-def test_optimize_layout_preserves_data_and_parallelizes(spark, tmp_path):
-    """Ingest into the optimized layout: same rows, fact tables multi-file
-    (parallel scans), redirect active only for the ingested dir."""
-    from duckdb_fastlanes_spark import catalog
-
-    root = catalog.optimize_layout(spark, SF_DIR, cache_root=str(tmp_path / "layout"))
+@contextlib.contextmanager
+def _jobs(sc, group: str):
+    """Collect the ids of the jobs this thread (and the threads it hands its
+    job group to) fires inside the block."""
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
     try:
-        li_opt = table(spark, SF_DIR, "lineitem")
-        assert li_opt.rdd.getNumPartitions() > 1
-        raw = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-        assert li_opt.count() == raw.count()
-        assert li_opt.exceptAll(raw).count() == 0
-        assert os.path.isdir(os.path.join(root, "lineitem.parquet"))
+        yield ids
     finally:
-        # restore the raw-path redirect for the rest of the suite
-        catalog._LAYOUT.pop(SF_DIR.rstrip("/"), None)
-        catalog._CACHE.clear()
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_optimize_layout_preserves_data_and_parallelizes(spark, tmp_path):
+    """Below the small-input gate the layout lives in memory: nothing is
+    written, the source dir is returned, each table is pinned at the width
+    a staged copy scanned at (min(staged file count, cores)) with the same
+    rows as the source, and a second call fires no job."""
+    from duckdb_fastlanes_spark import catalog
+    from duckdb_fastlanes_spark.sizing import catalog_stats
+
+    key = SF_DIR.rstrip("/")
+    cache_root = str(tmp_path / "layout")
+    stats = catalog_stats(key)
+    assert not stats.large
+    par = spark.sparkContext.defaultParallelism
+    try:
+        assert catalog.optimize_layout(spark, SF_DIR, cache_root=cache_root) == key
+        assert not os.path.exists(cache_root)
+        for name in catalog.TABLES:
+            df = table(spark, SF_DIR, name)
+            assert df.is_cached, name
+            # a staged copy of an unsplit table was one file
+            want = min(catalog._n_files(stats, name) or 1, par)
+            assert df.rdd.getNumPartitions() == want, name
+            raw = catalog._read_raw(spark, f"{key}/{name}.parquet", name)
+            assert df.exceptAll(raw).count() == 0, name
+            assert raw.exceptAll(df).count() == 0, name
+        assert dict(table(spark, SF_DIR, "events").dtypes)["ts"] == "timestamp"
+        # a query reading a pinned table twice still plans
+        li = table(spark, SF_DIR, "lineitem")
+        assert li.join(li.select("l_orderkey").distinct(), "l_orderkey").count() == li.count()
+        with _jobs(spark.sparkContext, "layout-second-call") as ids:
+            catalog.optimize_layout(spark, SF_DIR, cache_root=cache_root)
+            catalog.warm_cache(spark, SF_DIR)
+        assert ids == []
+    finally:
+        reset_layout(SF_DIR)
+
+
+def test_staged_copy_is_current_by_stamp(spark, tmp_path, monkeypatch):
+    """Above the gate a staged copy is current only while its stamp (source
+    path and stat, layout parameters) matches: a same-row-count rewrite of
+    the source restages, and a re-call on an unchanged source fires no job."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from duckdb_fastlanes_spark import catalog, sizing
+
+    monkeypatch.setattr(sizing, "SMALL_INPUT_BYTES", 0)
+    src = str(tmp_path / "sf")
+    os.makedirs(src)
+    for t in ("region", "nation"):
+        shutil.copy(f"{SF_DIR}/{t}.parquet", f"{src}/{t}.parquet")
+    cache_root = str(tmp_path / "layout")
+    try:
+        root = catalog.optimize_layout(spark, src, cache_root=cache_root)
+        assert root.startswith(cache_root)
+        before = sorted(r.r_name for r in table(spark, src, "region").collect())
+        # same 5 rows, changed values
+        t = pq.read_table(f"{src}/region.parquet")
+        t = t.set_column(
+            t.schema.get_field_index("r_name"), "r_name", pc.utf8_lower(t["r_name"])
+        )
+        pq.write_table(t, f"{src}/region.parquet")
+        catalog.optimize_layout(spark, src, cache_root=cache_root)
+        after = sorted(r.r_name for r in table(spark, src, "region").collect())
+        assert len(after) == len(before) == 5
+        assert after == sorted(n.lower() for n in before) != before
+        with _jobs(spark.sparkContext, "layout-stamp-recall") as ids:
+            catalog.optimize_layout(spark, src, cache_root=cache_root)
+        assert ids == []
+    finally:
+        reset_layout(src)
+
+
+def test_hive_prune_publishes_one_dir_under_concurrent_builds(
+    spark, duck, tmp_path, monkeypatch
+):
+    """Two threads building the hive-partitioned events copy at once: both
+    answers match the oracle, and exactly one published dir (named by the
+    source fingerprint) and no build dir remain."""
+    import tempfile
+    import threading
+
+    from duckdb_fastlanes_spark import registry
+
+    cache = tmp_path / "cache"
+    cache.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(cache))
+    name = "scan_hive_partition_prune"
+    fn = registry.queries()[name]
+    expect = sorted(duck.execute(registry.oracles()[name]).fetchall())
+    start = threading.Barrier(2)
+    results: list = []
+
+    def run() -> None:
+        start.wait()
+        try:
+            results.append(sorted(map(tuple, fn(spark, SF_DIR).collect())))
+        except Exception as e:  # surfaced by the assert below
+            results.append(e)
+
+    threads = [threading.Thread(target=run) for _ in range(2)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    assert results == [expect, expect]
+    left = os.listdir(cache)
+    assert len(left) == 1 and left[0].startswith("dfs_hive_events_"), left
+    assert ".tmp-" not in left[0]
 
 
 def test_catalog_bucketed_staging_is_exchange_free_and_fresh(spark, tmp_path):
@@ -192,7 +301,8 @@ def test_catalog_bucketed_staging_is_exchange_free_and_fresh(spark, tmp_path):
     os.makedirs(src)
     for t in ("lineitem", "orders"):
         shutil.copy(f"{SF_DIR}/{t}.parquet", f"{src}/{t}.parquet")
-    root = catalog.optimize_layout(spark, src, cache_root=str(tmp_path / "layout"))
+    catalog.optimize_layout(spark, src, cache_root=str(tmp_path / "layout"))
+    root = str(tmp_path / "bucketed")
     try:
         # force the bucketed staging (the gauge gate keeps it off for tiny
         # inputs; the layer under test is scale-path-only by design)
@@ -221,8 +331,7 @@ def test_catalog_bucketed_staging_is_exchange_free_and_fresh(spark, tmp_path):
         for tname, _, _ in catalog._BUCKET_TABLE.values():
             spark.sql(f"DROP TABLE IF EXISTS {tname}")
         catalog._BUCKET_TABLE.clear()
-        catalog._LAYOUT.pop(src, None)
-        catalog._CACHE.clear()
+        reset_layout(src)
 
 
 def test_source_fingerprint_sees_subsecond_and_inode_changes(tmp_path):

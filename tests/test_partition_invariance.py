@@ -1,6 +1,6 @@
 """Partition invariance: representative queries must produce identical
-results on the optimize_layout multi-file catalog as on the raw single-file
-driver parquet — the A13/B17 parallelism matrix (threads=1 vs threads=2 in
+results on the optimize_layout catalog (multi-partition in-memory pins) as
+on the raw single-file driver parquet — the A13/B17 parallelism matrix (threads=1 vs threads=2 in
 the reference, test/all_types_*.test:163) generalized to whole queries.
 Catches hidden order-dependence (unrounded double aggregates, collect_list
 without sort, nondeterministic tie-breaks) that single-partition runs mask."""
@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 
 from duckdb_fastlanes_spark import catalog, registry
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, reset_layout
 
 #: one query per family with meaningful shuffle/aggregate behavior
 REPRESENTATIVE = [
@@ -110,6 +110,8 @@ def layouts(spark, tmp_path_factory):
     for name in REPRESENTATIVE:
         raw[name] = sorted(map(tuple, qs[name](spark, SF_DIR).collect()))
 
+    # below the small-input gate: every table pinned in memory, the split
+    # tables at min(staged file count, cores) partitions
     root = catalog.optimize_layout(
         spark, SF_DIR, cache_root=str(tmp_path_factory.mktemp("layout"))
     )
@@ -118,9 +120,8 @@ def layouts(spark, tmp_path_factory):
         for name in REPRESENTATIVE:
             multi[name] = sorted(map(tuple, qs[name](spark, SF_DIR).collect()))
     finally:
-        catalog._LAYOUT.pop(SF_DIR.rstrip("/"), None)
-        catalog._CACHE.clear()
-    assert root  # staged
+        reset_layout(SF_DIR)
+    assert root == SF_DIR.rstrip("/")
     return raw, multi
 
 
