@@ -16,8 +16,13 @@ Reference parity map (SURVEY.md §2.A):
       ``maxRecordsPerFile`` (fls_writer.cpp:213-240, 189-211)
 
 The compression kernels themselves (SURVEY §2.A′ K1-K17) are realized by
-Parquet encodings (RLE_DICTIONARY / DELTA_BINARY_PACKED / BYTE_STREAM_SPLIT /
-PLAIN) + ZSTD pages inside Spark's vectorized reader/writer — not reimplemented.
+Parquet encodings + ZSTD pages inside Spark's vectorized reader/writer — not
+reimplemented here (``fls_native.py`` is the literal twin). ``write_fls``
+writes Parquet v2 data pages: parquet-mr then stores a column as a dictionary
+(RLE_DICTIONARY) while the dictionary stays small, and otherwise falls back to
+DELTA_BINARY_PACKED for integers and DELTA_BYTE_ARRAY for strings, where the
+v1 writer falls back to PLAIN. Spark's parquet-mr offers no option for
+BYTE_STREAM_SPLIT, so doubles fall back to PLAIN.
 """
 
 from __future__ import annotations
@@ -184,6 +189,7 @@ def write_fls(
         writer.write.mode(mode)
         .option("compression", "zstd")
         .option("parquet.block.size", str(block_bytes))
+        .option("parquet.writer.version", "v2")
     )
     if row_groups_per_file is not None:
         out = out.option("maxRecordsPerFile", str(row_groups_per_file * row_group_size))

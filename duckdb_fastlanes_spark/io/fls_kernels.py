@@ -19,10 +19,21 @@ un-vendored external FastLanes library, see fls_native.py module docstring):
 - RLE as index-mapped runs: run-value array + per-position run index
   (kernels/rle_map_kernel.hpp:7-24 decodes ``rle_vals[idxs[i]]``)
   → ``rle_encode`` / ``rle_decode``
+- DELTA (first value + FFOR of the successive differences; decode is a
+  running sum) → ``delta_encode`` / ``delta_decode``. The FastLanes layout
+  paper's transposed order exists to make this decode fast: the vector
+  splits into independent lanes, each with its own running sum, that SIMD
+  registers add in parallel. NumPy's ``cumsum`` runs the one sequential sum
+  in C, so the dense order stores the same information
 - ALP for doubles/floats: decimal-scaled integers + patched exceptions
   (kernels/alp_kernel.hpp; published ALP scheme: enc = round(v·10^e/10^f),
   dec = enc·10^f/10^e, out-of-domain values patched positionally)
-  → ``alp_encode`` / ``alp_decode``
+  → ``alp_choose`` / ``alp_encode`` / ``alp_decode``. Decode divides by the
+  exact double 10^e rather than multiplying by the inexact 10^-e, and the
+  encoder's exactness check uses the same formula, so every double that is
+  the correctly rounded value of a decimal encodes without an exception;
+  the exponent is the one with the smallest estimated size (bit width ×
+  values + 80 bits per exception), as in the ALP paper
 - Uncompressed (kernels/uncompressed_kernel.hpp) → raw little-endian
 - FSST (symbol-table string compression, ≤255 symbols of 1-8 bytes +
   escape byte; kernels/fsst_kernel.hpp:11-59, fsst_dict_kernel.hpp:18-80;
@@ -45,6 +56,8 @@ dense layout is the idiomatic equivalent, and it is what our writer frames.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 #: FastLanes vector size (reference CFG::VEC_SZ / fls_writer.hpp:12-22)
@@ -54,26 +67,37 @@ _U64 = np.uint64
 
 
 # ---------------------------------------------------------------- bit packing
+@functools.lru_cache(maxsize=256)  # ≤ ~40 KB each; vectors are ≤ VEC_SZ long
+def _bit_layout(n: int, width: int) -> tuple[np.ndarray, ...]:
+    """Where ``n`` dense ``width``-bit fields sit in 64-bit words, shared by
+    every vector of that length and width (read-only arrays):
+    ``(word, off, starts, spill, spill_word, spill_shift)``. ``starts``
+    marks the first field of each word; ``spill`` lists the fields that
+    cross into the next word, ``spill_word`` that word and ``spill_shift``
+    the 64 - off that moves their high bits there."""
+    bitpos = np.arange(n, dtype=_U64) * _U64(width)
+    word = (bitpos >> _U64(6)).astype(np.int64)
+    off = bitpos & _U64(63)
+    starts = np.flatnonzero(np.diff(word, prepend=-1))
+    spill = np.flatnonzero(off + _U64(width) > _U64(64))
+    out = (word, off, starts, spill, word[spill] + 1, _U64(64) - off[spill])
+    for a in out:
+        a.setflags(write=False)
+    return out
+
+
 def pack_bits(vals: np.ndarray, width: int) -> bytes:
     """Pack ``vals`` (uint64 array, each < 2**width) into dense little-endian
     ``width``-bit fields. width == 0 → empty payload (all values are 0)."""
     if width == 0:
         return b""
     v = vals.astype(_U64, copy=False)
-    n = len(v)
-    bitpos = np.arange(n, dtype=_U64) * _U64(width)
-    word = (bitpos >> _U64(6)).astype(np.int64)
-    off = bitpos & _U64(63)
-    out = np.zeros(int((n * width + 63) // 64), dtype=_U64)
-    np.bitwise_or.at(out, word, (v << off) & _U64(0xFFFFFFFFFFFFFFFF))
-    # bits that spill into the next word: v >> (64 - off), guarding off == 0
-    # (a shift by 64 is undefined; when off == 0 nothing spills)
-    spill = off > _U64(0)
-    if spill.any():
-        hi = v[spill] >> (_U64(64) - off[spill])
-        w2 = word[spill] + 1
-        keep = hi != _U64(0)
-        np.bitwise_or.at(out, w2[keep], hi[keep])
+    word, off, starts, spill, spill_word, spill_shift = _bit_layout(len(v), width)
+    out = np.zeros((len(v) * width + 63) // 64, dtype=_U64)
+    # fields never share a bit, so OR == ADD: sum each word's low parts in
+    # one reduceat; at most one field spills into any word
+    out[word[starts]] = np.add.reduceat(v << off, starts)
+    out[spill_word] |= v[spill] >> spill_shift
     return out.tobytes()
 
 
@@ -82,15 +106,12 @@ def unpack_bits(buf: bytes, width: int, n: int) -> np.ndarray:
     if width == 0:
         return np.zeros(n, dtype=_U64)
     words = np.frombuffer(buf, dtype=_U64)
-    bitpos = np.arange(n, dtype=_U64) * _U64(width)
-    word = (bitpos >> _U64(6)).astype(np.int64)
-    off = bitpos & _U64(63)
-    lo = words[word] >> off
-    # guard the word+1 gather at the buffer edge and the off==0 shift-by-64
-    nxt = np.minimum(word + 1, len(words) - 1)
-    hi = np.where(off > _U64(0), words[nxt] << (_U64(64) - np.maximum(off, _U64(1))), _U64(0))
-    mask = _U64(0xFFFFFFFFFFFFFFFF) if width == 64 else _U64((1 << width) - 1)
-    return (lo | hi) & mask
+    word, off, _, spill, spill_word, spill_shift = _bit_layout(n, width)
+    out = words[word] >> off
+    out[spill] |= words[spill_word] << spill_shift
+    if width < 64:
+        out &= _U64((1 << width) - 1)
+    return out
 
 
 # ----------------------------------------------------------------------- FFOR
@@ -135,43 +156,71 @@ def rle_decode(run_values: np.ndarray, idxs: np.ndarray) -> np.ndarray:
     return run_values[idxs.astype(np.int64)]
 
 
+# ---------------------------------------------------------------------- DELTA
+def delta_encode(arr: np.ndarray) -> tuple[int, int, int, bytes]:
+    """DELTA: the first value, then the FFOR of the successive differences.
+
+    Returns ``(first, base, width, payload)``. ``np.diff`` wraps in int64, and
+    :func:`delta_decode`'s running sum wraps back, so every int64 vector
+    roundtrips, adjacent ``INT64_MIN``/``INT64_MAX`` included."""
+    a = arr.astype(np.int64, copy=False)
+    first = int(a[0]) if len(a) else 0
+    return (first, *ffor_encode(np.diff(a)))
+
+
+def delta_decode(first: int, base: int, width: int, payload: bytes, n: int) -> np.ndarray:
+    """Inverse of :func:`delta_encode` → int64 vector of ``n`` values."""
+    out = np.empty(n, dtype=np.int64)
+    if n:
+        out[0] = first
+        out[1:] = ffor_decode(base, width, payload, n - 1)
+        np.cumsum(out, out=out)
+    return out
+
+
 # ------------------------------------------------------------------------ ALP
-#: candidate decimal exponents (ALP probes e ∈ [0..18], f ∈ [0..e])
+#: candidate decimal exponents (ALP probes e ∈ [0..18]); every power of ten
+#: up to 10^22 is an exact double, so dividing by one is correctly rounded
 _ALP_MAX_E = 18
 _F10 = np.power(10.0, np.arange(_ALP_MAX_E + 1))
-_IF10 = np.power(10.0, -np.arange(_ALP_MAX_E + 1).astype(np.float64))
+#: bits the writer stores per exception: the 8-byte value and 2-byte position
+_ALP_EXC_BITS = 80
 
 
-def _alp_try(v: np.ndarray, e: int, f: int) -> np.ndarray | None:
-    """Integers i with v == i * 10^f / 10^e where representable, else None."""
+def _alp_try(v: np.ndarray, e: int, f: int) -> np.ndarray:
+    """Integers i with v == i * 10^f / 10^e where representable, else NaN.
+    The check is :func:`alp_decode`'s formula, so a hit decodes byte-exact."""
     # overflow to inf is expected for large |v| at high e — those lanes are
     # rejected by the isfinite/magnitude gate and land on the exception path
     with np.errstate(over="ignore", invalid="ignore"):
-        scaled = v * _F10[e] * _IF10[f]
-        # fastround trick domain: |scaled| must fit well inside 2^51
-        ok = np.isfinite(scaled) & (np.abs(scaled) < 2.0**51)
+        scaled = v * _F10[e] / _F10[f]
+        # fastround trick domain: |scaled| must fit well inside 2^51 (NaN
+        # and ±inf fail the compare)
         i = np.round(scaled)
-        exact = ok & (i * _F10[f] * _IF10[e] == v)
+        exact = (np.abs(scaled) < 2.0**51) & (i * _F10[f] / _F10[e] == v)
     return np.where(exact, i, np.nan)
 
 
 def alp_choose(v: np.ndarray, sample: int = 32) -> tuple[int, int]:
-    """Pick (e, f) maximizing exact hits on a sample (the reference samples
-    per row group and refines per vector; one-level sampling suffices here)."""
+    """Pick the exponent that minimizes the estimated encoded size on a
+    sample (ALP's size-scored search). Every ``e`` is scored in one pass:
+    sample size × bit width of the exact ints' range, plus
+    ``_ALP_EXC_BITS`` per exception; the first minimum wins. ``f`` stays 0:
+    with the exact division a double that is the correctly rounded value
+    of a decimal with ≤ e fraction digits already encodes at (e, 0)."""
     s = v[:: max(1, len(v) // sample)][:sample]
     s = s[np.isfinite(s)]
     if len(s) == 0:
         return 0, 0
-    best, best_hits = (0, 0), -1
-    for e in range(_ALP_MAX_E + 1):
-        for f in range(e + 1):
-            t = _alp_try(s, e, f)
-            hits = int(np.count_nonzero(~np.isnan(t)))
-            if hits > best_hits:
-                best, best_hits = (e, f), hits
-            if hits == len(s):
-                return e, f
-    return best
+    with np.errstate(over="ignore", invalid="ignore"):
+        scaled = s * _F10[:, None]
+        i = np.round(scaled)
+        exact = (np.abs(scaled) < 2.0**51) & (i / _F10[:, None] == s)
+    lo = np.where(exact, i, np.inf).min(axis=1)
+    hi = np.where(exact, i, -np.inf).max(axis=1)
+    width = np.frexp(np.where(hi >= lo, hi - lo, 0.0))[1]  # = bit_length
+    cost = len(s) * width + _ALP_EXC_BITS * (len(s) - exact.sum(axis=1))
+    return int(np.argmin(cost)), 0
 
 
 def alp_encode(
@@ -182,16 +231,14 @@ def alp_encode(
     Returns ``(ints, exc_pos, exc_vals)``: ints = int64 encodings (exception
     slots hold the first valid int — the reference patches them after decode,
     so the placeholder value is free), exc_pos/exc_vals = positions + raw
-    doubles of values the scheme cannot represent (inf/nan/irrational)."""
+    doubles of values the scheme cannot represent (NaN, ±inf, values with no
+    exact decimal at this exponent)."""
     t = _alp_try(v, e, f)
-    bad = np.isnan(t) | np.isnan(v) | ~np.isfinite(v)
-    # NaN input encodes exactly only via exception (NaN != NaN)
-    bad |= np.isnan(v)
     # -0.0 == 0.0 passes the exactness check but would decode as +0.0,
     # losing the IEEE-754 sign bit — route it through the exception path
     # so the roundtrip stays BYTE-exact, not merely value-equal (matters
     # for hash/fingerprint parity on float columns)
-    bad |= (v == 0) & np.signbit(v)
+    bad = np.isnan(t) | ((v == 0) & np.signbit(v))
     exc_pos = np.flatnonzero(bad)
     exc_vals = v[exc_pos]
     fill = 0.0
@@ -205,7 +252,9 @@ def alp_encode(
 def alp_decode(
     ints: np.ndarray, e: int, f: int, exc_pos: np.ndarray, exc_vals: np.ndarray
 ) -> np.ndarray:
-    out = ints.astype(np.float64) * _F10[f] * _IF10[e]
+    out = ints.astype(np.float64)
+    out *= _F10[f]
+    out /= _F10[e]  # the exact division _alp_try checked against
     if len(exc_pos):
         out[exc_pos.astype(np.int64)] = exc_vals
     return out

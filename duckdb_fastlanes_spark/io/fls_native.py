@@ -14,16 +14,21 @@ implements that literally:
 
 - 1024-value vectors (CFG::VEC_SZ; fls_writer.hpp:12-22), grouped into row
   groups of N_VEC_PER_RG vectors;
-- per-vector encoding chosen by measured size: constant / FFOR / RLE /
-  frequency / SLPatch / dictionary / ALP / FSST / uncompressed — the same
-  kernel family the reference materializes through
+- per-vector encoding chosen by measured size: integer vectors take the
+  shortest of constant / FFOR / DELTA / RLE / frequency / SLPatch, float
+  vectors the shorter of ALP (exponent scored by estimated size, exact
+  decimal decode) and uncompressed, strings dictionary / FSST /
+  uncompressed — the same kernel family the reference materializes through
   (src/include/reader/materializer/kernels/*.hpp); FSST symbol tables are
   chunk-shared (fsst_dict_kernel.hpp's Prepare-once geometry) and kept
   only when a sampled encode shows ≥15% size win;
 - a self-describing footer with schema + per-row-group per-column segment
   offsets and min/max statistics, used for row-group pruning on read
   (row_group_filter.cpp:75-199, row_group_statistics.cpp) — serialized as
-  zlib'd JSON in place of the unavailable FlatBuffers schema.
+  zlib'd JSON in place of the unavailable FlatBuffers schema. The footer
+  carries ``FORMAT_VERSION``; the reader refuses any other version (version
+  1 files decoded ALP by multiplying with 10^-e, which this reader would
+  misread).
 
 Scale shape: one ``.fls`` file per Spark partition on write
 (``mapInArrow`` — each task encodes its own partition, no shuffle), and on
@@ -57,6 +62,8 @@ from duckdb_fastlanes_spark.io import fls_kernels as K
 MAGIC = b"FLSNATI1"
 VEC_SZ = K.VEC_SZ
 DEFAULT_ROW_GROUP_SIZE = 64 * VEC_SZ  # 65,536 rows — reference bench geometry
+#: footer version: 2 = exact-division ALP and DELTA vectors
+FORMAT_VERSION = 2
 
 ENC_CONSTANT = 0
 ENC_UNCOMP = 1
@@ -67,6 +74,7 @@ ENC_RLE = 5
 ENC_FSST = 6
 ENC_FREQ = 7
 ENC_SLPATCH = 8
+ENC_DELTA = 9
 
 ENC_NAMES = {
     ENC_CONSTANT: "constant",
@@ -78,6 +86,7 @@ ENC_NAMES = {
     ENC_FSST: "fsst",
     ENC_FREQ: "frequency",
     ENC_SLPATCH: "slpatch",
+    ENC_DELTA: "delta",
 }
 
 #: chunk-header string modes (first byte of every column chunk)
@@ -136,61 +145,56 @@ def _valid_mask(arr: pa.Array) -> np.ndarray | None:
 
 
 def _encode_int_vector(v: np.ndarray, out: bytearray) -> int:
-    """Choose + write the cheapest integer encoding by MEASURED bytes
-    (constant / RLE / frequency / SLPatch / FFOR); returns ENC_*."""
+    """Write the integer encoding with the fewest bytes: every candidate
+    body is built and measured (FFOR first, so it wins ties); returns ENC_*."""
     if len(v) and (v == v[0]).all():
         out += struct.pack("<q", int(v[0]))
         return ENC_CONSTANT
     base, width, payload = K.ffor_encode(v)
+    first, d_base, d_width, d_payload = K.delta_encode(v)
     runs, idxs = K.rle_encode(v)
-    # RLE cost: run values (8B each) + packed run indices; FFOR cost: payload
     iw = int(len(runs) - 1).bit_length()
-    rle_cost = 2 + 8 * len(runs) + 1 + (len(v) * iw + 7) // 8
-    ffor_cost = 9 + len(payload)
     top, f_pos, f_vals = K.freq_encode(v)
-    freq_cost = 8 + 2 + 10 * len(f_pos)
     sp_base, sp_w, sp_payload, sp_pos, sp_vals = K.slpatch_encode(v)
-    slp_cost = 9 + len(sp_payload) + 2 + 10 * len(sp_pos)
-    best = min(rle_cost if len(runs) <= 0xFFFF else 1 << 62,
-               freq_cost, slp_cost, ffor_cost)
-    if best == freq_cost and freq_cost < ffor_cost:
-        out += struct.pack("<qH", top, len(f_pos))
-        out += f_pos.astype(np.uint16).tobytes()
-        out += f_vals.astype(np.int64).tobytes()
-        return ENC_FREQ
-    if len(runs) <= 0xFFFF and best == rle_cost and rle_cost < ffor_cost:
-        out += struct.pack("<H", len(runs))
-        out += runs.astype(np.int64).tobytes()
-        out += struct.pack("<B", iw)
-        out += K.pack_bits(idxs, iw)
-        return ENC_RLE
-    if best == slp_cost and slp_cost < ffor_cost and len(sp_pos):
-        out += struct.pack("<qB", sp_base, sp_w)
-        out += sp_payload
-        out += struct.pack("<H", len(sp_pos))
-        out += sp_pos.astype(np.uint16).tobytes()
-        out += sp_vals.astype(np.int64).tobytes()
-        return ENC_SLPATCH
-    out += struct.pack("<qB", base, width)
-    out += payload
-    return ENC_FFOR
+    bodies = {
+        ENC_FFOR: struct.pack("<qB", base, width) + payload,
+        ENC_DELTA: struct.pack("<qqB", first, d_base, d_width) + d_payload,
+        ENC_FREQ: struct.pack("<qH", top, len(f_pos))
+        + f_pos.astype(np.uint16).tobytes()
+        + f_vals.astype(np.int64).tobytes(),
+        ENC_RLE: struct.pack("<H", len(runs))
+        + runs.astype(np.int64).tobytes()
+        + struct.pack("<B", iw)
+        + K.pack_bits(idxs, iw),
+        ENC_SLPATCH: struct.pack("<qB", sp_base, sp_w)
+        + sp_payload
+        + struct.pack("<H", len(sp_pos))
+        + sp_pos.astype(np.uint16).tobytes()
+        + sp_vals.astype(np.int64).tobytes(),
+    }
+    enc = min(bodies, key=lambda k: len(bodies[k]))
+    out += bodies[enc]
+    return enc
 
 
 def _encode_float_vector(v: np.ndarray, ef: tuple[int, int], out: bytearray) -> int:
+    """Write ALP at the chunk's exponent, or the raw doubles when ALP
+    measures no smaller; returns ENC_*."""
     if len(v) and not np.isnan(v).any() and (v == v[0]).all():
         out += struct.pack("<d", float(v[0]))
         return ENC_CONSTANT
     ints, exc_pos, exc_vals = K.alp_encode(v, *ef)
-    if len(exc_pos) <= len(v) // 4 and len(exc_pos) <= 0xFFFF:
-        base, width, payload = K.ffor_encode(ints)
-        alp_cost = 2 + 9 + len(payload) + 2 + 10 * len(exc_pos)
-        if alp_cost < 8 * len(v):
-            out += struct.pack("<BBqB", ef[0], ef[1], base, width)
-            out += payload
-            out += struct.pack("<H", len(exc_pos))
-            out += exc_pos.astype(np.uint16).tobytes()
-            out += exc_vals.astype(np.float64).tobytes()
-            return ENC_ALP
+    base, width, payload = K.ffor_encode(ints)
+    alp = (
+        struct.pack("<BBqB", ef[0], ef[1], base, width)
+        + payload
+        + struct.pack("<H", len(exc_pos))
+        + exc_pos.astype(np.uint16).tobytes()
+        + exc_vals.astype(np.float64).tobytes()
+    )
+    if len(alp) < 8 * len(v):
+        out += alp
+        return ENC_ALP
     out += v.astype(np.float64).tobytes()
     return ENC_UNCOMP
 
@@ -390,7 +394,7 @@ def write_table(
             if tbl.num_rows == 0:
                 break
         footer = {
-            "version": 1,
+            "version": FORMAT_VERSION,
             "n_rows": int(tbl.num_rows),
             "schema": [{"name": n, "type": t} for n, t in logical],
             "row_groups": row_groups,
@@ -412,7 +416,18 @@ def read_footer(path: str) -> dict:
         if magic != MAGIC:
             raise ValueError(f"{path}: not an fls_native file (bad trailing magic)")
         f.seek(end - 12 - flen)
-        return json.loads(zlib.decompress(f.read(flen)))
+        footer = json.loads(zlib.decompress(f.read(flen)))
+    if footer.get("version") != FORMAT_VERSION:
+        raise ValueError(
+            f"{path}: fls_native footer version {footer.get('version')}, this "
+            f"reader decodes version {FORMAT_VERSION} only; rewrite the file"
+        )
+    return footer
+
+
+def _packed_len(n: int, width: int) -> int:
+    """Bytes of ``n`` packed ``width``-bit fields (whole 64-bit words)."""
+    return ((n * width + 63) // 64) * 8
 
 
 def _read_vec_header(buf: memoryview, p: int) -> tuple[int, int, np.ndarray | None, int]:
@@ -495,7 +510,7 @@ def _decode_chunk(buf: memoryview, ltype: str, n_rows: int) -> pa.Array:
             elif enc == ENC_DICT:
                 (w,) = struct.unpack_from("<B", buf, p)
                 p += 1
-                nb = ((n * w + 63) // 64) * 8 if w else 0
+                nb = _packed_len(n, w)
                 codes = K.unpack_bits(bytes(buf[p : p + nb]), w, n)
                 p += nb
                 out_str.append(
@@ -532,7 +547,7 @@ def _decode_chunk(buf: memoryview, ltype: str, n_rows: int) -> pa.Array:
                 p += 8 * n_runs
                 (w,) = struct.unpack_from("<B", buf, p)
                 p += 1
-                nb = ((n * w + 63) // 64) * 8 if w else 0
+                nb = _packed_len(n, w)
                 idxs = K.unpack_bits(bytes(buf[p : p + nb]), w, n)
                 p += nb
                 out_int.append(K.rle_decode(runs, idxs))
@@ -547,7 +562,7 @@ def _decode_chunk(buf: memoryview, ltype: str, n_rows: int) -> pa.Array:
             elif enc == ENC_SLPATCH:
                 base, w = struct.unpack_from("<qB", buf, p)
                 p += 9
-                nb = ((n * w + 63) // 64) * 8 if w else 0
+                nb = _packed_len(n, w)
                 payload = bytes(buf[p : p + nb])
                 p += nb
                 (n_exc,) = struct.unpack_from("<H", buf, p)
@@ -557,10 +572,17 @@ def _decode_chunk(buf: memoryview, ltype: str, n_rows: int) -> pa.Array:
                 exc_vals = np.frombuffer(buf, dtype=np.int64, count=n_exc, offset=p)
                 p += 8 * n_exc
                 out_int.append(K.slpatch_decode(base, w, payload, n, exc_pos, exc_vals))
+            elif enc == ENC_DELTA:
+                first, base, w = struct.unpack_from("<qqB", buf, p)
+                p += 17
+                nb = _packed_len(n - 1, w)
+                payload = bytes(buf[p : p + nb])
+                p += nb
+                out_int.append(K.delta_decode(first, base, w, payload, n))
             else:  # ENC_FFOR
                 base, w = struct.unpack_from("<qB", buf, p)
                 p += 9
-                nb = ((n * w + 63) // 64) * 8 if w else 0
+                nb = _packed_len(n, w)
                 out_int.append(K.ffor_decode(base, w, bytes(buf[p : p + nb]), n))
                 p += nb
         else:  # float
@@ -571,7 +593,7 @@ def _decode_chunk(buf: memoryview, ltype: str, n_rows: int) -> pa.Array:
             elif enc == ENC_ALP:
                 e, fexp, base, w = struct.unpack_from("<BBqB", buf, p)
                 p += 11
-                nb = ((n * w + 63) // 64) * 8 if w else 0
+                nb = _packed_len(n, w)
                 ints = K.ffor_decode(base, w, bytes(buf[p : p + nb]), n)
                 p += nb
                 (n_exc,) = struct.unpack_from("<H", buf, p)

@@ -18,12 +18,15 @@ import os
 import tempfile
 from decimal import Decimal
 
+import duckdb
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from duckdb_fastlanes_spark.io.fls import read_fls, write_fls
 from duckdb_fastlanes_spark.io.schema_promotion import promote_type, promoted_schema
+from tests.conftest import SF_DIR
 
 HUGE = 469231731687303715884105728
 
@@ -69,6 +72,32 @@ def test_all_types_roundtrip(spark, n_partitions, tmp_path):
     assert orig.exceptAll(rt).count() == 0
     assert rt.exceptAll(orig).count() == 0
     assert rt.count() == 1024
+
+
+def test_write_fls_writes_v2_pages(spark, tmp_path):
+    """Parquet v2 pages: unique keys fall back from the dictionary to
+    DELTA_BINARY_PACKED instead of PLAIN."""
+    out = str(tmp_path / "orders")
+    write_fls(spark.read.parquet(f"{SF_DIR}/orders.parquet"), out)
+    files = glob.glob(os.path.join(out, "*.parquet"))
+    assert files
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for rg in range(md.num_row_groups):
+            col = md.row_group(rg).column(0)
+            assert col.path_in_schema == "o_orderkey"
+            assert "DELTA_BINARY_PACKED" in col.encodings
+
+
+@pytest.mark.parametrize("table", ["orders", "lineitem", "documents"])
+def test_write_fls_v2_reads_back_like_v1_in_duckdb(spark, tmp_path, table):
+    df = spark.read.parquet(f"{SF_DIR}/{table}.parquet")
+    v2, v1 = str(tmp_path / "v2"), str(tmp_path / "v1")
+    write_fls(df, v2)
+    df.write.option("compression", "zstd").parquet(v1)
+    q = "SELECT count(*), sum(hash(COLUMNS(*))) FROM read_parquet('{}/*.parquet')"
+    con = duckdb.connect()
+    assert con.sql(q.format(v2)).fetchall() == con.sql(q.format(v1)).fetchall()
 
 
 def test_row_group_size_must_be_multiple_of_1024(spark):

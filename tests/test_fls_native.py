@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -39,6 +40,19 @@ def test_pack_bits_roundtrip(width, seed):
         else np.zeros(1024, dtype=np.uint64)
     )
     assert (K.unpack_bits(K.pack_bits(v, width), width, 1024) == v).all()
+
+
+@given(
+    st.integers(min_value=1, max_value=64),
+    st.integers(min_value=0, max_value=1024),
+    st.integers(min_value=0, max_value=2**32),
+)
+@settings(max_examples=60, deadline=None)
+def test_pack_bits_matches_python_int_reference(width, n, seed):
+    """The dense layout, spelled with one Python int: field i at bit i·width."""
+    v = np.random.default_rng(seed).integers(0, 2**width, size=n, dtype=np.uint64)
+    ref = sum(int(x) << (i * width) for i, x in enumerate(v))
+    assert K.pack_bits(v, width) == ref.to_bytes((n * width + 63) // 64 * 8, "little")
 
 
 @given(st.lists(st.integers(min_value=-(2**62), max_value=2**62), min_size=1, max_size=1024))
@@ -87,6 +101,102 @@ def test_alp_negative_zero_byte_exact():
     ints, ep, ev = K.alp_encode(v, e, f)
     out = K.alp_decode(ints, e, f, ep, ev)
     assert out.tobytes() == v.tobytes()  # bit-exact, sign of zero included
+
+
+_I64 = np.iinfo(np.int64)
+
+
+@given(
+    st.lists(
+        st.one_of(
+            st.integers(min_value=_I64.min, max_value=_I64.max),
+            st.sampled_from([_I64.min, _I64.max]),
+        ),
+        min_size=1,
+        max_size=1024,
+    )
+)
+@settings(max_examples=60, deadline=None)
+def test_delta_roundtrip(vals):
+    a = np.array(vals, dtype=np.int64)
+    assert (K.delta_decode(*K.delta_encode(a), len(a)) == a).all()
+
+
+def test_delta_wraps_adjacent_int64_extremes():
+    a = np.array([_I64.min, _I64.max, _I64.min, 0, -1, _I64.max], dtype=np.int64)
+    assert (K.delta_decode(*K.delta_encode(a), len(a)) == a).all()
+
+
+@given(
+    st.integers(min_value=-(2**62), max_value=2**62),
+    st.lists(st.integers(min_value=0, max_value=40), min_size=1, max_size=3000),
+    st.integers(min_value=0, max_value=2**32),
+)
+@settings(max_examples=25, deadline=None)
+def test_delta_container_roundtrip_with_nulls_and_tail(tmp_path_factory, start, steps, seed):
+    """Sorted keys (DELTA's shape) with nulls, over a tail vector."""
+    keys = start + np.cumsum(np.array(steps, dtype=np.int64))
+    nulls = np.random.default_rng(seed).random(len(keys)) < 0.1
+    t = pa.table({"k": pa.array(keys, pa.int64(), mask=nulls)})
+    path = str(tmp_path_factory.mktemp("delta") / "d.fls")
+    write_table(t, path, row_group_size=2048)
+    assert pa.Table.from_batches(list(read_file(path))).equals(t)
+
+
+def _encodings(footer: dict, col: int = 0) -> dict[str, int]:
+    out: dict[str, int] = {}
+    for rg in footer["row_groups"]:
+        for k, v in rg["columns"][col]["encodings"].items():
+            out[k] = out.get(k, 0) + v
+    return out
+
+
+def test_sorted_keys_select_delta(tmp_path):
+    keys = np.sort(pq.read_table(f"{SF_DIR}/lineitem.parquet")["l_orderkey"].to_numpy())
+    footer = write_table(pa.table({"k": pa.array(keys)}), str(tmp_path / "k.fls"))
+    assert set(_encodings(footer)) == {"delta"}
+
+
+def test_stride_two_keys_have_delta_width_zero(tmp_path):
+    keys = np.arange(1, 2 * 4096, 2, dtype=np.int64)
+    assert K.delta_encode(keys[:1024])[2] == 0
+    path = str(tmp_path / "s.fls")
+    footer = write_table(pa.table({"k": pa.array(keys)}), path, row_group_size=4096)
+    assert _encodings(footer) == {"delta": 4}
+    # chunk = mode byte + 4 × (4-byte vector header + 17-byte DELTA header)
+    assert footer["row_groups"][0]["columns"][0]["length"] == 1 + 4 * 21
+    got = pa.Table.from_batches(list(read_file(path))).column("k").to_numpy()
+    assert np.array_equal(got, keys)
+
+
+@given(st.integers(min_value=0, max_value=2**32))
+@settings(max_examples=20, deadline=None)
+def test_alp_random_cents_choose_e2_with_no_exceptions(seed):
+    cents = np.random.default_rng(seed).integers(-(10**11), 10**11, 1024)
+    v = cents / 100.0
+    e, f = K.alp_choose(v)
+    assert (e, f) == (2, 0)
+    ints, ep, ev = K.alp_encode(v, e, f)
+    assert len(ep) == 0 and (ints == cents).all()
+    assert K.alp_decode(ints, e, f, ep, ev).tobytes() == v.tobytes()
+
+
+def test_alp_specials_stay_exceptions():
+    v = np.random.default_rng(5).integers(-(10**11), 10**11, 1024) / 100.0
+    special = {3: -0.0, 70: float("nan"), 500: float("inf"), 1000: float("-inf")}
+    for i, x in special.items():
+        v[i] = x
+    e, f = K.alp_choose(v)
+    ints, ep, ev = K.alp_encode(v, e, f)
+    assert ep.tolist() == sorted(special)
+    assert K.alp_decode(ints, e, f, ep, ev).tobytes() == v.tobytes()
+
+
+def test_alp_choose_on_catalog_columns():
+    o = pq.read_table(f"{SF_DIR}/orders.parquet", columns=["o_totalprice"])
+    li = pq.read_table(f"{SF_DIR}/lineitem.parquet", columns=["l_quantity"])
+    assert K.alp_choose(o["o_totalprice"].to_numpy()) == (2, 0)
+    assert K.alp_choose(li["l_quantity"].to_numpy()) == (0, 0)
 
 
 def test_rle_index_mapped_contract():
@@ -336,6 +446,21 @@ def test_empty_table(tmp_path):
     write_table(t, path)
     batches = list(read_file(path))
     assert sum(b.num_rows for b in batches) == 0
+
+
+def test_version_one_footer_raises(tmp_path, monkeypatch):
+    """Version-1 files decoded ALP by multiplying with 10^-e; the reader
+    must refuse them rather than misread them silently."""
+    from duckdb_fastlanes_spark.io import fls_native
+
+    path = str(tmp_path / "v1.fls")
+    with monkeypatch.context() as m:
+        m.setattr(fls_native, "FORMAT_VERSION", 1)
+        write_table(pa.table({"x": pa.array([1.25, 2.5])}), path)
+    with pytest.raises(ValueError, match="version 1"):
+        read_footer(path)
+    with pytest.raises(ValueError, match="version 1"):
+        list(read_file(path))
 
 
 # ---------------------------------------------------------------- spark path
