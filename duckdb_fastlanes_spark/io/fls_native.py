@@ -28,16 +28,20 @@ implements that literally:
   zlib'd JSON in place of the unavailable FlatBuffers schema. The footer
   carries ``FORMAT_VERSION``; the reader refuses any other version (version
   1 files decoded ALP by multiplying with 10^-e, which this reader would
-  misread).
+  misread; version 2 float zone maps skipped ±inf and NaN and could prune
+  rows that pass).
 
 Scale shape: one ``.fls`` file per Spark partition on write
 (``mapInArrow`` — each task encodes its own partition, no shuffle), and on
-read the file list is parallelized and each task decodes whole files
-(footer → prune row groups → decode selected columns only). That is
-per-file parallel scan + projection + zone-map pruning — the same execution
-shape as the Parquet path, with the decode running in NumPy over Arrow
-batches. On a cluster the directory lives on a shared filesystem, exactly
-like every other file sink.
+read the file list is parallelized and each task runs the one reader,
+``read_file``, over whole files: footer → prune row groups by zone map →
+decode the predicate columns → exact adaptive filter per 1024-value vector
+→ decode the projected payload columns of surviving row groups → widen and
+NULL-fill to the dataset schema. That is per-file parallel scan +
+projection + zone-map pruning + exact filtering — the execution shape of
+the Parquet path, with the decode running in NumPy over Arrow batches. On a
+cluster the directory lives on a shared filesystem, exactly like every
+other file sink.
 
 Supported logical types: int8/16/32/64, float32/64, bool, string,
 timestamp_us, date32. Nulls carried as per-vector validity bitmaps (the
@@ -49,6 +53,7 @@ a superset). LIST/STRUCT/MAP are not supported, matching the reference
 from __future__ import annotations
 
 import json
+import operator
 import os
 import struct
 import zlib
@@ -62,8 +67,9 @@ from duckdb_fastlanes_spark.io import fls_kernels as K
 MAGIC = b"FLSNATI1"
 VEC_SZ = K.VEC_SZ
 DEFAULT_ROW_GROUP_SIZE = 64 * VEC_SZ  # 65,536 rows — reference bench geometry
-#: footer version: 2 = exact-division ALP and DELTA vectors
-FORMAT_VERSION = 2
+#: footer version: 2 = exact-division ALP and DELTA vectors; 3 = float zone
+#: maps over every non-NaN value, none for a chunk holding NaN
+FORMAT_VERSION = 3
 
 ENC_CONSTANT = 0
 ENC_UNCOMP = 1
@@ -332,10 +338,10 @@ def _encode_chunk(
     if len(vv):
         if int_backed:
             stats["min"], stats["max"] = int(vv.min()), int(vv.max())
-        else:
-            fin = vv[np.isfinite(vv)]
-            if len(fin):
-                stats["min"], stats["max"] = float(fin.min()), float(fin.max())
+        elif not np.isnan(vv).any():
+            # ±inf included (the JSON footer carries Infinity); SQL sorts NaN
+            # above every number, so a chunk holding one keeps no min/max
+            stats["min"], stats["max"] = float(vv.min()), float(vv.max())
     ef = K.alp_choose(vv if len(vv) else np_all) if not int_backed else None
 
     for start in range(0, len(np_all), VEC_SZ):
@@ -644,15 +650,23 @@ def _decode_chunk(buf: memoryview, ltype: str, n_rows: int) -> pa.Array:
 
 Predicate = tuple[str, str, object]
 
+#: predicate op → (Python comparison, pyarrow.compute kernel name)
+_OPS = {
+    "=": (operator.eq, "equal"),
+    "==": (operator.eq, "equal"),
+    "!=": (operator.ne, "not_equal"),
+    ">": (operator.gt, "greater"),
+    ">=": (operator.ge, "greater_equal"),
+    "<": (operator.lt, "less"),
+    "<=": (operator.le, "less_equal"),
+}
 
-def _rg_survives(rg: dict, schema: list[dict], preds: Sequence[Predicate]) -> bool:
-    """Conservative zone-map check: prune only when stats PROVE emptiness
+
+def _rg_survives(rg: dict, zone_preds: Sequence[tuple[int, str, object]]) -> bool:
+    """Conservative zone-map check over ``(column index, op, value in the
+    stats domain)``: prune only when stats PROVE emptiness
     (row_group_filter.cpp:75-199 semantics — missing stats never prune)."""
-    by_name = {c["name"]: i for i, c in enumerate(schema)}
-    for col, op, val in preds:
-        i = by_name.get(col)
-        if i is None:
-            continue
+    for i, op, val in zone_preds:
         meta = rg["columns"][i]
         lo, hi = meta.get("min"), meta.get("max")
         if lo is None or hi is None:
@@ -670,163 +684,158 @@ def _rg_survives(rg: dict, schema: list[dict], preds: Sequence[Predicate]) -> bo
     return True
 
 
+def _coerce(val: object, ltype: str) -> tuple[pa.Scalar, object]:
+    """A predicate value as (compare scalar, zone-map value): date and
+    timestamp values become the column's Arrow type and its int stats
+    domain (days or µs since the epoch)."""
+    if ltype in ("date32", "timestamp_us"):
+        s = pa.scalar(val).cast(_TYPES[ltype][0])
+        return s, s.value
+    return pa.scalar(val), val
+
+
+def _compare(arr: pa.Array, op: str, s: pa.Scalar) -> pa.Array:
+    """``arr op s`` as a null-free mask under SQL semantics: NULL fails
+    every comparison, and NaN equals itself and sorts above every number
+    (Spark, DuckDB), where IEEE makes every compare with NaN but ``!=``
+    false."""
+    import pyarrow.compute as pc
+
+    cmp, kernel = _OPS[op]
+    m = getattr(pc, kernel)(arr, s)
+    v = s.as_py()
+    nan_val = isinstance(v, float) and v != v
+    if nan_val or pa.types.is_floating(arr.type):
+        # rank NaN 1 and a number 0: only number-vs-number needs IEEE
+        m = pc.if_else(pc.is_nan(arr), cmp(1, nan_val), cmp(0, 1) if nan_val else m)
+    return pc.fill_null(m, False)
+
+
 def read_file(
     path: str,
     columns: Sequence[str] | None = None,
     predicate: Sequence[Predicate] = (),
+    stats: dict | None = None,
+    schema: Sequence[tuple[str, str]] | None = None,
+    union_by_name: bool = False,
 ) -> Iterator[pa.RecordBatch]:
-    """Decode one file → RecordBatches (one per surviving row group)."""
-    footer = read_footer(path)
-    schema = footer["schema"]
-    names = [c["name"] for c in schema]
-    want = list(columns) if columns is not None else names
-    idx = {n: i for i, n in enumerate(names)}
-    ltypes = {c["name"]: c["type"] for c in schema}
-    out_schema = arrow_schema([(n, ltypes[n]) for n in want])
-    with open(path, "rb") as f:
-        data = memoryview(f.read())
-    for rg in footer["row_groups"]:
-        if not _rg_survives(rg, schema, predicate):
-            continue
-        arrays = []
-        for n in want:
-            meta = rg["columns"][idx[n]]
-            chunk = data[meta["offset"] : meta["offset"] + meta["length"]]
-            arrays.append(_decode_chunk(chunk, ltypes[n], rg["n_rows"]))
-        yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+    """Decode one file → RecordBatches (one per row group with survivors)
+    holding exactly the rows that satisfy ``predicate``. The one scan:
 
+    1. read the footer once;
+    2. prune row groups by zone map (row_group_filter.cpp:75-199);
+    3. decode the predicate columns;
+    4. A6, the reference's runtime filter executor (fls_reader.cpp:357-380,
+       filter_executor.cpp:38-55): evaluate the predicates per 1024-value
+       vector in an order re-ranked by OBSERVED pass-fraction (most
+       selective first), short-circuiting a vector once its survivor set
+       is empty;
+    5. decode payload columns only for row groups with survivors;
+    6. widen and NULL-fill to ``schema``, the dataset's logical schema
+       (default: the file's own).
 
-# ============================================================ adaptive filter
-#: predicate op → pyarrow.compute kernel (null comparisons yield null →
-#: filled False below, the SQL semantics)
-def _pc_op(op: str):
+    With no predicate no mask work runs. Without ``union_by_name`` every
+    needed column must be in the file at its ``schema`` type (strict mode,
+    ``ValueError`` otherwise); with it, narrower types widen per
+    ``promote_ltype`` and absent columns read as NULL, so a predicate on
+    an absent column keeps no row. A predicate on a column outside
+    ``schema`` is skipped, and warned about when no predicate column
+    matched. ``stats``, when given, is filled only AFTER the generator is
+    exhausted: the final predicate ``order``, per-predicate ``passed`` /
+    ``seen`` counters and the ``skipped_predicates``."""
     import pyarrow.compute as pc
 
-    return {
-        "=": pc.equal,
-        "==": pc.equal,
-        "!=": pc.not_equal,
-        ">": pc.greater,
-        ">=": pc.greater_equal,
-        "<": pc.less,
-        "<=": pc.less_equal,
-    }[op]
-
-
-def read_file_adaptive(
-    path: str,
-    columns: Sequence[str] | None = None,
-    predicate: Sequence[Predicate] = (),
-    stats: dict | None = None,
-) -> Iterator[pa.RecordBatch]:
-    """A6 — ADAPTIVE FILTER ORDERING, the literal twin of the reference's
-    runtime filter executor (src/reader/fls_reader.cpp:357-380,
-    filter_executor.cpp:38-55): predicates are evaluated per 1024-value
-    vector in an order re-ranked by OBSERVED selectivity (running
-    pass-fraction over alive rows, most selective first), short-circuiting
-    a vector as soon as its survivor set is empty — later predicates in
-    the order never run on the rows an earlier one killed. Payload
-    (non-predicate) columns are decoded only for row groups with ≥1
-    surviving row, and only surviving rows are materialized into the
-    output batch (the reference's late-materialization payoff at row-group
-    granularity). Zone-map pruning (_rg_survives) still runs first — the
-    adaptive order governs what happens INSIDE groups the stats cannot
-    prune.
-
-    Returns filtered batches (the predicate is EXACT for columns present
-    in the file; predicates on columns ABSENT from this file's schema are
-    skipped — the same conservative contract _rg_survives uses — so a
-    multi-file dataset with divergent schemas degrades instead of
-    crashing). ``stats``, when given, is filled only AFTER the generator
-    is fully exhausted (final predicate order and per-predicate
-    (passed, seen) counters); a caller that breaks early sees an empty
-    dict."""
     footer = read_footer(path)
-    schema = footer["schema"]
-    names = [c["name"] for c in schema]
-    want = list(columns) if columns is not None else names
-    idx = {n: i for i, n in enumerate(names)}
-    ltypes = {c["name"]: c["type"] for c in schema}
-    out_schema = arrow_schema([(n, ltypes[n]) for n in want])
-    preds = [p for p in predicate if p[0] in idx]
+    have = {c["name"]: (i, c["type"]) for i, c in enumerate(footer["schema"])}
+    ltypes = dict(schema) if schema is not None else {n: have[n][1] for n in have}
+    want = list(columns) if columns is not None else list(ltypes)
+    preds = [p for p in predicate if p[0] in ltypes]
     if predicate and not preds:
-        # every predicate column is absent from this file: on a multi-file
-        # dataset that is the documented degrade; on a single file it is
-        # almost certainly a typo — make it loud either way
         import warnings
 
         warnings.warn(
-            f"read_file_adaptive({os.path.basename(path)}): no predicate "
-            f"column {sorted({p[0] for p in predicate})} exists in the file "
-            "schema; returning unfiltered rows",
+            f"read_file({os.path.basename(path)}): no predicate column "
+            f"{sorted({p[0] for p in predicate})} exists in the file schema; "
+            "returning unfiltered rows",
             stacklevel=2,
         )
-    pred_cols = [c for c, _, _ in preds]
-    # evaluation order state: index into preds; passed/seen counters
+    for n in () if union_by_name else dict.fromkeys(want + [p[0] for p in preds]):
+        if n not in have:
+            raise ValueError(f"{path}: no column {n!r} in this file")
+        if have[n][1] != ltypes[n]:
+            raise ValueError(
+                f"{path}: column {n!r} is {have[n][1]} here but {ltypes[n]} in "
+                "the dataset's first file; read with union_by_name=True to widen"
+            )
+    out_schema = arrow_schema([(n, ltypes[n]) for n in want])
+    coerced = [(c, op, *_coerce(v, ltypes[c])) for c, op, v in preds]
+    # a column the file lacks reads as NULL, which fails every comparison
+    absent = any(c not in have for c, _, _ in preds)
+    row_groups = [] if absent else footer["row_groups"]
+    # a widened column's stats share the logical value domain, except for
+    # date32 → timestamp_us and anything → str: those never prune
+    zone_preds = [
+        (have[c][0], op, zv)
+        for c, op, _, zv in coerced
+        if c in have
+        and (have[c][1] == ltypes[c] or ltypes[c] not in ("timestamp_us", "str"))
+    ]
     order = list(range(len(preds)))
     passed = [0] * len(preds)
     seen = [0] * len(preds)
     with open(path, "rb") as f:
-        data = memoryview(f.read())
-    import pyarrow.compute as pc
+        data = memoryview(f.read()) if row_groups else None
 
-    for rg in footer["row_groups"]:
-        if not _rg_survives(rg, schema, preds):
+    def decode(n: str, rg: dict) -> pa.Array:
+        i, t = have[n]
+        off, ln = rg["columns"][i]["offset"], rg["columns"][i]["length"]
+        arr = _decode_chunk(data[off : off + ln], t, rg["n_rows"])
+        return arr if t == ltypes[n] else arr.cast(_TYPES[ltypes[n]][0])
+
+    for rg in row_groups:
+        if not _rg_survives(rg, zone_preds):
             continue
         n_rows = rg["n_rows"]
-        # decode ONLY the predicate columns up front
-        dec: dict[str, pa.Array] = {}
-        for n in dict.fromkeys(pred_cols):
-            meta = rg["columns"][idx[n]]
-            chunk = data[meta["offset"] : meta["offset"] + meta["length"]]
-            dec[n] = _decode_chunk(chunk, ltypes[n], n_rows)
-        keep_parts: list[pa.Array] = []
-        any_alive = False
-        for s in range(0, n_rows, 1024):
-            ln = min(1024, n_rows - s)
-            mask = None  # None = all alive
-            alive = ln
-            # re-rank by observed pass-fraction before every vector: the
-            # most selective predicate (lowest pass rate) runs first, the
-            # reference's re-ranking policy at vector cadence
-            order.sort(key=lambda i: (passed[i] + 1) / (seen[i] + 2))
-            for i in order:
-                if alive == 0:
-                    break  # short-circuit: nothing left for this filter
-                col, op, val = preds[i]
-                sl = dec[col].slice(s, ln)
-                m = pc.fill_null(_pc_op(op)(sl, pa.scalar(val)), False)
-                seen[i] += alive
-                mask = m if mask is None else pc.and_(mask, m)
-                alive = pc.sum(mask).as_py() or 0
-                passed[i] += alive
-            if mask is None:
-                mask = pa.array(np.ones(ln, dtype=bool))
-            keep_parts.append(mask)
-            any_alive = any_alive or alive > 0
-        if not any_alive:
-            continue  # payload columns never decoded for this group
-        keep = pa.concat_arrays([m.combine_chunks() if isinstance(m, pa.ChunkedArray) else m for m in keep_parts])
+        dec = {n: decode(n, rg) for n in dict.fromkeys(p[0] for p in preds)}
+        keep = None
+        if coerced:
+            keep_parts: list[pa.Array] = []
+            any_alive = False
+            for s in range(0, n_rows, VEC_SZ):
+                ln = min(VEC_SZ, n_rows - s)
+                mask = None
+                alive = ln
+                # re-rank by observed pass-fraction before every vector: the
+                # most selective predicate (lowest pass rate) runs first
+                order.sort(key=lambda i: (passed[i] + 1) / (seen[i] + 2))
+                for i in order:
+                    if alive == 0:
+                        break  # short-circuit: nothing left for this filter
+                    col, op, sc, _ = coerced[i]
+                    m = _compare(dec[col].slice(s, ln), op, sc)
+                    seen[i] += alive
+                    mask = m if mask is None else pc.and_(mask, m)
+                    alive = mask.true_count
+                    passed[i] += alive
+                keep_parts.append(mask)
+                any_alive = any_alive or alive > 0
+            if not any_alive:
+                continue  # payload columns never decoded for this group
+            keep = pa.concat_arrays(keep_parts)
+        n_out = n_rows if keep is None else keep.true_count
         arrays = []
         for n in want:
-            if n in dec:
-                arr = dec[n]
-            else:
-                meta = rg["columns"][idx[n]]
-                chunk = data[meta["offset"] : meta["offset"] + meta["length"]]
-                arr = _decode_chunk(chunk, ltypes[n], n_rows)
-            arrays.append(arr.filter(keep))
+            if n not in have:
+                arrays.append(pa.nulls(n_out, out_schema.field(n).type))
+                continue
+            arr = dec[n] if n in dec else decode(n, rg)
+            arrays.append(arr if keep is None else arr.filter(keep))
         yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
     if stats is not None:
         stats["order"] = [preds[i] for i in order]
         stats["passed"] = list(passed)
         stats["seen"] = list(seen)
-        # surface the degrade case: predicates whose column this file does
-        # not carry were skipped (multi-file schema divergence is the
-        # intended tolerance; a typo'd column on a single-file read is the
-        # caller's bug) — record them so callers/tests can tell an
-        # entirely-unmatched predicate from a clean exact filter
-        stats["skipped_predicates"] = [p for p in predicate if p[0] not in idx]
+        stats["skipped_predicates"] = [p for p in predicate if p[0] not in ltypes]
 
 
 # ============================================================ spark integration
@@ -957,75 +966,47 @@ def read_fls_native(
     columns: Sequence[str] | None = None,
     predicate: Sequence[Predicate] = (),
     union_by_name: bool = False,
-    adaptive_filter: bool = False,
 ):
-    """Distributed read: parallelize the file list, decode per task.
+    """Distributed read: parallelize the file list, decode per task with
+    ``read_file``.
 
     ``columns`` = projection pushdown (only those chunks are decoded);
-    ``predicate`` = zone-map row-group pruning (conservative; Spark-side
-    filters still apply afterwards, same division of labor as Parquet);
-    ``adaptive_filter`` = additionally EXECUTE the predicates inside the
-    reader with selectivity-adapted ordering and short-circuit per
-    1024-value vector (A6, read_file_adaptive) — the returned rows then
-    satisfy the predicate exactly and payload columns decode only for
-    surviving row groups (not combinable with union_by_name);
+    ``predicate`` = zone-map row-group pruning, then the exact A6 filter
+    per 1024-value vector: the returned rows satisfy the predicate
+    exactly, with SQL NULL and NaN semantics, and payload columns decode
+    only for row groups with survivors. A predicate column that is in no
+    file's schema raises ``ValueError`` here, on the driver.
     ``union_by_name`` = align heterogeneous file schemas by column name
     with the reference's type-promotion rules (A2/A3,
     fls_multi_file_info.cpp:70-82 + schema_builder.cpp:132-243): missing
     columns NULL-fill, narrower types widen per the promotion lattice.
-    Without it the first file's schema is authoritative (files with a
-    different schema fail decode, same as the reference's strict mode)."""
+    Without it the first file's schema is authoritative: a file that
+    lacks a needed column or stores it at another type fails its decode
+    task with a ``ValueError`` naming the file (the reference's strict
+    mode)."""
     files = sorted(
         os.path.join(path, fn) for fn in os.listdir(path) if fn.endswith(".fls")
     )
     if not files:
         raise FileNotFoundError(f"no .fls files under {path}")
-    if union_by_name:
-        logical = _union_schema([read_footer(f) for f in files])
-    else:
-        footer = read_footer(files[0])
-        logical = [(c["name"], c["type"]) for c in footer["schema"]]
+    footers = [read_footer(f) for f in (files if union_by_name else files[:1])]
+    logical = _union_schema(footers)
     ltypes = dict(logical)
+    missing = sorted({c for c, _, _ in predicate} - ltypes.keys())
+    if missing:
+        raise ValueError(f"{path}: predicate column(s) {missing} in no file's schema")
     want = list(columns) if columns is not None else [n for n, _ in logical]
-    out_schema = arrow_schema([(n, ltypes[n]) for n in want])
     ddl = ", ".join(f"`{n}` {_SPARK_DDL[ltypes[n]]}" for n in want)
     preds = list(predicate)
-    want_t = tuple(want)
-
-    if adaptive_filter and union_by_name:
-        raise ValueError("adaptive_filter does not combine with union_by_name")
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from duckdb_fastlanes_spark.io.fls_native import read_file as _rf
-        from duckdb_fastlanes_spark.io.fls_native import (
-            read_file_adaptive as _rfa,
-        )
+        from duckdb_fastlanes_spark.io.fls_native import read_file
 
         for b in batches:
             for fp in b.column(0).to_pylist():
-                if not union_by_name:
-                    if adaptive_filter:
-                        yield from _rfa(fp, columns=want_t, predicate=preds)
-                    else:
-                        yield from _rf(fp, columns=want_t, predicate=preds)
-                    continue
-                # per-file: decode the columns the file has, widen to the
-                # promoted type, NULL-fill the absent ones
-                have = {c["name"] for c in read_footer(fp)["schema"]}
-                cols = tuple(n for n in want_t if n in have)
-                for rb in _rf(fp, columns=cols, predicate=preds):
-                    n_rows = rb.num_rows
-                    arrays = []
-                    for name in want_t:
-                        t = out_schema.field(name).type
-                        if name in have:
-                            arr = rb.column(cols.index(name))
-                            arrays.append(
-                                arr if arr.type == t else arr.cast(t)
-                            )
-                        else:
-                            arrays.append(pa.nulls(n_rows, t))
-                    yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+                yield from read_file(
+                    fp, want, preds, schema=logical, union_by_name=union_by_name
+                )
 
     # r11 (guide §4): typed VALUES LocalRelation for the file list —
     # createDataFrame(list) is a Python-RDD-backed relation whose every

@@ -231,10 +231,11 @@ def fls_native_prune_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (row_group_filter.cpp:75-199): lineitem is written ORDERED by l_orderkey
     in small row groups (tight per-group min/max), then read with a range
     predicate — the reader prunes non-overlapping row groups from the
-    footer stats before decoding a single vector, and projection pushdown
-    decodes only the two referenced columns. The Spark-side filter then
-    applies exactly (pruning is conservative, never wrong), and the oracle
-    verifies the numbers."""
+    footer stats before decoding a single vector, filters the surviving
+    groups exactly, and projection pushdown decodes only the two
+    referenced columns. The Spark-side filter stays as a residual (it
+    keeps no row the reader dropped), and the oracle verifies the
+    numbers."""
     from duckdb_fastlanes_spark.io.fls_native import (
         read_fls_native,
         write_fls_native,
@@ -284,11 +285,11 @@ def fls_native_adaptive_filter_scan(spark: SparkSession, sf_dir: str) -> DataFra
     flag column keeps ~12.5%) are evaluated per 1024-value vector in an
     order re-ranked by OBSERVED pass-fraction, short-circuiting vectors
     whose survivor set empties, with payload columns decoded only for
-    surviving row groups. The reader's output satisfies the predicate
-    EXACTLY (not conservatively), so the aggregate needs no Spark-side
-    re-filter — the oracle hash pins that exactness. The pytest suite
-    additionally asserts order convergence and permutation invariance
-    (tests/test_fls_native.py)."""
+    surviving row groups. Every ``read_fls_native`` predicate runs this
+    way; the reader's output satisfies the predicate EXACTLY, so this
+    aggregate has no Spark-side re-filter — the oracle hash pins that
+    exactness. The pytest suite additionally asserts order convergence
+    and permutation invariance (tests/test_fls_native.py)."""
     from duckdb_fastlanes_spark.io.fls_native import (
         read_fls_native,
         write_fls_native,
@@ -308,7 +309,6 @@ def fls_native_adaptive_filter_scan(spark: SparkSession, sf_dir: str) -> DataFra
         out,
         columns=["l_orderkey", "l_quantity"],
         predicate=[("l_quantity", ">=", 48.0), ("key_bucket", "=", 1)],
-        adaptive_filter=True,
     )
     return rt.agg(
         F.count(F.lit(1)).alias("n"),

@@ -7,6 +7,8 @@ mismatches) plus property tests on each codec kernel.
 
 from __future__ import annotations
 
+import datetime
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -414,21 +416,39 @@ def test_rle_chosen_for_long_runs(tmp_path):
     assert "rle" in encs
 
 
-def test_rowgroup_pruning_skips(tmp_path):
+def _record_decodes(monkeypatch) -> list[str]:
+    """Patch the one chunk decoder to log the logical type of every chunk
+    it decodes; returns the log."""
+    from duckdb_fastlanes_spark.io import fls_native
+
+    decoded: list[str] = []
+    real = fls_native._decode_chunk
+    monkeypatch.setattr(
+        fls_native,
+        "_decode_chunk",
+        lambda buf, ltype, n_rows: decoded.append(ltype) or real(buf, ltype, n_rows),
+    )
+    return decoded
+
+
+def test_rowgroup_pruning_skips(tmp_path, monkeypatch):
     n = 8192
     t = pa.table({"k": pa.array(np.arange(n, dtype=np.int64)), "v": pa.array(np.ones(n))})
     path = str(tmp_path / "p.fls")
     write_table(t, path, row_group_size=1024)
     footer = read_footer(path)
     assert len(footer["row_groups"]) == 8
+    decoded = _record_decodes(monkeypatch)
     batches = list(read_file(path, predicate=[("k", ">=", 6000)]))
-    # row groups [0..5] (max key 6143 in rg5) — rgs 0-4 proven empty, pruned
+    # rgs 0-4 (max key 5119) are proven empty by the zone map and never
+    # decoded: 3 surviving groups × 2 columns
     assert len(batches) == 3
+    assert len(decoded) == 3 * 2
+    # exact: 144 rows of rg5 (6000..6143) plus rgs 6 and 7
     got = pa.Table.from_batches(batches)
-    assert got.num_rows == 3 * 1024
-    # conservative: surviving rows still need the exact filter
+    assert got.num_rows == 2192
     k = np.asarray(got.column("k"))
-    assert k.min() == 5120 and k.max() == 8191
+    assert k.min() == 6000 and k.max() == 8191
 
 
 def test_projection_decodes_only_requested(tmp_path):
@@ -461,6 +481,33 @@ def test_version_one_footer_raises(tmp_path, monkeypatch):
         read_footer(path)
     with pytest.raises(ValueError, match="version 1"):
         list(read_file(path))
+
+
+def test_version_two_footer_raises(tmp_path, monkeypatch):
+    """Version-2 float zone maps skipped ±inf and NaN, so they could prune
+    rows that pass; the reader refuses those files too."""
+    from duckdb_fastlanes_spark.io import fls_native
+
+    path = str(tmp_path / "v2.fls")
+    with monkeypatch.context() as m:
+        m.setattr(fls_native, "FORMAT_VERSION", 2)
+        write_table(pa.table({"x": pa.array([1.25, float("inf")])}), path)
+    with pytest.raises(ValueError, match="version 2"):
+        list(read_file(path))
+
+
+def test_float_zone_maps_keep_nan_and_inf_rows(tmp_path):
+    """A float chunk's zone map covers ±inf, and a chunk holding NaN (which
+    SQL sorts above every number) has none, so neither row is pruned."""
+    nan, inf = float("nan"), float("inf")
+    v = [1.0, 2.0, inf, nan] + [0.5] * 1020 + [1.0, 2.0, inf] + [0.5] * 1021
+    path = str(tmp_path / "nf.fls")
+    footer = write_table(pa.table({"v": pa.array(v)}), path, row_group_size=1024)
+    zone = [(c["columns"][0].get("min"), c["columns"][0].get("max")) for c in footer["row_groups"]]
+    assert zone == [(None, None), (0.5, inf)]
+    for pred in (("v", ">", 5.0), ("v", ">=", 3.0)):
+        got = pa.Table.from_batches(list(read_file(path, predicate=[pred])))
+        assert [repr(x) for x in got.column("v").to_pylist()] == ["inf", "nan", "inf"]
 
 
 # ---------------------------------------------------------------- spark path
@@ -547,7 +594,9 @@ def test_promote_ltype_lattice():
         promote_ltype("timestamp_us", "int64")
 
 
-def test_spark_union_by_name_promotion(spark, tmp_path):
+def _two_generation_orders(spark, tmp_path):
+    """orders as two .fls generations: even keys narrowed to int without
+    o_orderpriority, odd keys with it; returns (dir, orders frame)."""
     from pyspark.sql import functions as F
 
     o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
@@ -560,17 +609,76 @@ def test_spark_union_by_name_promotion(spark, tmp_path):
     )
     write_fls_native(gen1, out, mode="overwrite")
     write_fls_native(gen2, out, mode="append")
+    return out, o
+
+
+def test_spark_union_by_name_promotion(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    out, o = _two_generation_orders(spark, tmp_path)
     ev = read_fls_native(spark, out, union_by_name=True)
     # promoted: int32 ⊔ int64 → bigint; missing column nullable string
     assert dict(ev.dtypes)["o_orderkey"] == "bigint"
     assert dict(ev.dtypes)["o_orderpriority"] == "string"
     assert ev.count() == o.count()
     n_missing = ev.filter(F.col("o_orderpriority").isNull()).count()
-    assert n_missing == gen1.count()
+    assert n_missing == o.filter(F.col("o_orderkey") % 2 == 0).count()
     # value fidelity through the widening
     got = ev.agg(F.sum("o_orderkey")).collect()[0][0]
     exp = o.agg(F.sum("o_orderkey")).collect()[0][0]
     assert got == exp
+
+
+def test_union_predicate_on_absent_column_matches_spark_filter(spark, tmp_path):
+    """A file that lacks the predicate column reads it as NULL, and NULL
+    fails every comparison: the reader keeps exactly Spark's own filter of
+    the unioned frame, widened key included."""
+    from pyspark.sql import functions as F
+
+    out, _ = _two_generation_orders(spark, tmp_path)
+    for op, val, col in (
+        ("=", "1-URGENT", F.col("o_orderpriority") == "1-URGENT"),
+        ("!=", "1-URGENT", F.col("o_orderpriority") != "1-URGENT"),
+    ):
+        got = read_fls_native(
+            spark, out, predicate=[("o_orderpriority", op, val), ("o_orderkey", ">", 2)],
+            union_by_name=True,
+        )
+        exp = read_fls_native(spark, out, union_by_name=True).filter(
+            col & (F.col("o_orderkey") > 2)
+        )
+        assert got.count() == exp.count() > 0
+        assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
+
+
+def _strict_mismatch_dir(tmp_path):
+    """a.fls holds (k int64, s str); b.fls holds only k, as int32."""
+    out = tmp_path / "strict"
+    out.mkdir()
+    write_table(pa.table({"k": pa.array([1, 2], pa.int64()), "s": ["x", "y"]}), str(out / "a.fls"))
+    write_table(pa.table({"k": pa.array([3], pa.int32())}), str(out / "b.fls"))
+    return str(out)
+
+
+def test_strict_read_names_file_and_column(spark, tmp_path):
+    """Without union_by_name the first file's schema is authoritative; a
+    file that lacks a column or stores it at another type fails with a
+    ValueError that names the file, the column and the types."""
+    out = _strict_mismatch_dir(tmp_path)
+    with pytest.raises(Exception, match=r"ValueError: .*b\.fls: column 'k' is int32 here but int64"):
+        read_fls_native(spark, out).collect()
+    with pytest.raises(Exception, match=r"ValueError: .*b\.fls: no column 's'"):
+        read_fls_native(spark, out, columns=["s"]).collect()
+    with pytest.raises(ValueError, match=r"b\.fls: no column 's'"):
+        list(read_file(f"{out}/b.fls", ["s"]))
+    assert read_fls_native(spark, out, union_by_name=True).count() == 3
+
+
+def test_predicate_column_in_no_schema_raises_on_driver(spark, tmp_path):
+    out = _strict_mismatch_dir(tmp_path)
+    for union in (False, True):
+        with pytest.raises(ValueError, match=r"predicate column\(s\) \['tpyo'\]"):
+            read_fls_native(spark, out, predicate=[("tpyo", "=", 1)], union_by_name=union)
 
 
 # ---------------------------------------------------------------- A6 adaptive
@@ -595,28 +703,24 @@ def _adaptive_fixture(spark, tmp_path, n_files=1):
     return out, o.toPandas()
 
 
-def test_adaptive_filter_matches_post_filter(spark, tmp_path):
-    from duckdb_fastlanes_spark.io.fls_native import read_file_adaptive
+def test_filter_matches_post_filter(spark, tmp_path):
     import os
 
     out, pdf = _adaptive_fixture(spark, tmp_path)
     f = [os.path.join(out, fn) for fn in os.listdir(out) if fn.endswith(".fls")][0]
     preds = [("o_totalprice", ">=", 400000.0), ("bucket", "=", 1)]
     got = pa.Table.from_batches(
-        list(read_file_adaptive(f, predicate=preds)),
+        list(read_file(f, predicate=preds)),
         ).to_pandas()
     exp = pdf[(pdf.o_totalprice >= 400000.0) & (pdf.bucket == 1)]
     assert sorted(got.o_orderkey) == sorted(exp.o_orderkey)
     assert len(got) == len(exp)
 
 
-def test_adaptive_filter_order_converges_and_is_permutation_invariant(
-    spark, tmp_path
-):
+def test_filter_order_converges_and_is_permutation_invariant(spark, tmp_path):
     """The executor must settle on the MOST SELECTIVE predicate first
     regardless of the order the caller wrote, and the surviving rows must
     be identical under any input permutation."""
-    from duckdb_fastlanes_spark.io.fls_native import read_file_adaptive
     import os
 
     out, pdf = _adaptive_fixture(spark, tmp_path)
@@ -630,7 +734,7 @@ def test_adaptive_filter_order_converges_and_is_permutation_invariant(
     for label, preds in (("sel_first", [sel, loose]), ("loose_first", [loose, sel])):
         stats: dict = {}
         got = pa.Table.from_batches(
-            list(read_file_adaptive(f, predicate=preds, stats=stats))
+            list(read_file(f, predicate=preds, stats=stats))
         ).to_pandas()
         rows[label] = sorted(got.o_orderkey)
         # final adaptive order puts the selective predicate first even when
@@ -641,14 +745,8 @@ def test_adaptive_filter_order_converges_and_is_permutation_invariant(
     assert rows["sel_first"] == sorted(exp.o_orderkey)
 
 
-def test_adaptive_filter_null_semantics(tmp_path):
+def test_filter_null_semantics(tmp_path):
     """NULLs fail every predicate (SQL semantics), never match."""
-    import pyarrow as pa
-    from duckdb_fastlanes_spark.io.fls_native import (
-        read_file_adaptive,
-        write_table,
-    )
-
     tbl = pa.table(
         {
             "k": pa.array([1, 2, None, 4, None, 6], type=pa.int64()),
@@ -658,9 +756,12 @@ def test_adaptive_filter_null_semantics(tmp_path):
     f = str(tmp_path / "nulls.fls")
     write_table(tbl, f)
     got = pa.Table.from_batches(
-        list(read_file_adaptive(f, predicate=[("k", ">", 1), ("v", ">", 0.0)]))
+        list(read_file(f, predicate=[("k", ">", 1), ("v", ">", 0.0)]))
     )
     assert got.column("k").to_pylist() == [4]
+
+
+_SPECIALS = [float("nan"), float("inf"), float("-inf"), -0.0]
 
 
 @settings(max_examples=25, deadline=None)
@@ -672,51 +773,78 @@ def test_adaptive_filter_null_semantics(tmp_path):
         min_size=1,
         max_size=4,
     ),
+    special=st.sampled_from([0.0, 0.02, 0.3]),
 )
-def test_adaptive_filter_property_random(tmp_path_factory, n, seed, ops):
-    """For ANY data and ANY predicate set, the adaptive executor must equal
-    decode-then-filter — including all-pass, all-fail, and sizes that do
-    not fill a 1024 vector."""
-    import numpy as np
-    import pyarrow as pa
-
-    from duckdb_fastlanes_spark.io.fls_native import (
-        read_file_adaptive,
-        write_table,
-    )
+def test_filter_matches_duckdb_random(tmp_path_factory, n, seed, ops, special):
+    """For ANY data and ANY predicate set — NULL, NaN and ±inf included —
+    the reader must keep exactly the rows DuckDB keeps: NaN equals itself
+    and sorts above every number, NULL fails. All-pass, all-fail, sizes
+    that do not fill a 1024 vector and zone maps over several row groups
+    are covered."""
+    import duckdb
 
     rng = np.random.default_rng(seed)
-    k = rng.integers(0, 20, size=n).astype(np.int64)
+    k = pa.array(rng.integers(0, 20, size=n), pa.int64(), mask=rng.random(n) < special / 2)
     v = np.round(rng.normal(0, 10, size=n), 3)
-    tbl = pa.table({"k": k, "v": v})
+    pick = rng.random(n) < special
+    v[pick] = rng.choice(_SPECIALS, size=int(pick.sum()))
+    tbl = pa.table({"k": k, "v": pa.array(v, mask=rng.random(n) < special / 2)})
     f = str(tmp_path_factory.mktemp("afp") / "t.fls")
-    write_table(tbl, f)
+    write_table(tbl, f, row_group_size=1024)
     preds = []
     for i, op in enumerate(ops):
-        col = "k" if i % 2 == 0 else "v"
-        val = int(rng.integers(0, 20)) if col == "k" else float(np.round(rng.normal(0, 10), 3))
-        preds.append((col, op, val))
-    batches = list(read_file_adaptive(f, predicate=preds))
-    got = (
-        pa.Table.from_batches(batches).to_pandas().sort_values(["k", "v"])
-        if batches
-        else None
-    )
-    import pandas as pd
+        if i % 2 == 0:
+            preds.append(("k", op, int(rng.integers(0, 20))))
+        elif rng.random() < 0.3:
+            preds.append(("v", op, float(rng.choice(_SPECIALS))))
+        else:
+            preds.append(("v", op, float(np.round(rng.normal(0, 10), 3))))
+    got = pa.Table.from_batches(list(read_file(f, predicate=preds)), schema=tbl.schema)
+    con = duckdb.connect()
+    con.register("src", tbl)
+    # materialize first: DuckDB's Arrow scan pushes filters down with IEEE
+    # compares, its own tables use SQL NaN ordering
+    con.execute("CREATE TABLE t AS SELECT * FROM src")
+    where = " AND ".join(f"{c} {op} ?" for c, op, _ in preds)
+    exp = con.execute(f"SELECT k, v FROM t WHERE {where}", [p[2] for p in preds]).fetchall()
+    rows = list(zip(got.column("k").to_pylist(), got.column("v").to_pylist()))
+    assert sorted(map(repr, rows)) == sorted(map(repr, exp)), preds
 
-    pdf = tbl.to_pandas()
-    m = pd.Series(True, index=pdf.index)
-    for col, op, val in preds:
-        s = pdf[col]
-        m &= {
-            "=": s == val, "!=": s != val, ">": s > val,
-            ">=": s >= val, "<": s < val, "<=": s <= val,
-        }[op]
-    exp = pdf[m].sort_values(["k", "v"])
-    if got is None:
-        assert len(exp) == 0
-    else:
-        assert got.reset_index(drop=True).equals(exp.reset_index(drop=True))
+
+@pytest.mark.parametrize(
+    "arrow_type, start, step",
+    [
+        (pa.date32(), datetime.date(2020, 1, 1), datetime.timedelta(days=1)),
+        (pa.timestamp("us"), datetime.datetime(2020, 1, 1), datetime.timedelta(minutes=7)),
+    ],
+)
+def test_temporal_predicates_prune_and_filter(tmp_path, monkeypatch, arrow_type, start, step):
+    """Date and timestamp predicate values compare against the column's
+    Arrow type and against the zone map's days or µs since the epoch."""
+    import duckdb
+
+    tbl = pa.table(
+        {
+            "t": pa.array([start + i * step for i in range(3000)], arrow_type),
+            "i": pa.array(np.arange(3000)),
+        }
+    )
+    path = str(tmp_path / "t.fls")
+    write_table(tbl, path, row_group_size=1024)
+    value = start + 1500 * step  # inside the second of three row groups
+    con = duckdb.connect()
+    con.register("src", tbl)
+    for op in ("=", "!=", ">", ">=", "<", "<="):
+        got = pa.Table.from_batches(
+            list(read_file(path, predicate=[("t", op, value)])), schema=tbl.schema
+        )
+        exp = con.execute(f"SELECT i FROM src WHERE t {op} ? ORDER BY i", [value]).fetchall()
+        assert sorted(got.column("i").to_pylist()) == [r[0] for r in exp], op
+    decoded = _record_decodes(monkeypatch)
+    got = list(read_file(path, ["i"], predicate=[("t", "=", value)]))
+    # the zone map leaves one row group: its t and i chunks
+    assert [b.column(0).to_pylist() for b in got] == [[1500]]
+    assert len(decoded) == 2
 
 
 def test_position_cap_raises_value_error_not_assert():
@@ -732,15 +860,13 @@ def test_position_cap_raises_value_error_not_assert():
         K.slpatch_encode(big)
 
 
-def test_adaptive_filter_records_skipped_predicates(spark, tmp_path):
-    """Predicates on columns absent from the file schema are skipped (the
-    multi-file divergent-schema degrade), but the skip must be VISIBLE:
+def test_filter_records_skipped_predicates(spark, tmp_path):
+    """A direct read skips predicates on columns absent from the file
+    schema, but the skip must be VISIBLE:
     recorded in stats, and warned about when NO predicate column matched
     (the typo case) — ADVICE r6."""
     import os
     import warnings
-
-    from duckdb_fastlanes_spark.io.fls_native import read_file_adaptive
 
     out, pdf = _adaptive_fixture(spark, tmp_path)
     f = [os.path.join(out, fn) for fn in os.listdir(out) if fn.endswith(".fls")][0]
@@ -748,7 +874,7 @@ def test_adaptive_filter_records_skipped_predicates(spark, tmp_path):
     stats: dict = {}
     got = pa.Table.from_batches(
         list(
-            read_file_adaptive(
+            read_file(
                 f, predicate=[("bucket", "=", 1), ("no_such_col", ">", 0)], stats=stats
             )
         )
@@ -761,7 +887,7 @@ def test_adaptive_filter_records_skipped_predicates(spark, tmp_path):
         warnings.simplefilter("always")
         n = sum(
             b.num_rows
-            for b in read_file_adaptive(
+            for b in read_file(
                 f, predicate=[("tpyo", "=", 1)], stats=stats2
             )
         )
